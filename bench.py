@@ -30,49 +30,7 @@ if _REPO_ROOT not in sys.path:
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ITERS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
-# Scaling-slope pass: the headline set re-times at a 10×-smaller scale
-# factor and the per-query ratio is reported (superlinear detector).
-SMALL_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_SMALL_SF_DIR", "/root/testdata/sf0.01"
-)
-SLOPE_ITERS = int(os.environ.get("SPARK_GRAFT_SLOPE_ITERS", "2"))
 
-
-def current_round_n() -> int | None:
-    """This bench run's round number, derived from the driver's own
-    record trail: the driver writes BENCH_r{N}.json at the END of round
-    N, so while round N is in progress the highest on-disk id is N-1.
-    Stamped into BENCH_DETAIL (`"round"`) so the round-start
-    bench_prev_cal.json ritual (SURVEY §8.5) is machine-checkable: a
-    mis-copied base whose `"round"` is not N-1 is REFUSED instead of
-    silently normalizing against a two-round-old quotient.
-
-    Known limitation (accepted): a MANUAL bench re-run after the
-    driver's BENCH_r{N}.json record lands is indistinguishable from
-    the next round's first run — it stamps r{N+1} and refuses the
-    r{N-1} base. That never happens in the driver's flow (the record
-    derives FROM the bench run, so bench always runs first); if done
-    by hand, the ritual meta-test flags the state with an actionable
-    message rather than letting normalization silently drift.
-    """
-    import glob
-    import re
-
-    ns = []
-    for p in glob.glob(os.path.join(_REPO_ROOT, "BENCH_r*.json")):
-        m = re.match(r"BENCH_r(\d+)\.json$", os.path.basename(p))
-        if m:
-            ns.append(int(m.group(1)))
-    return (max(ns) + 1) if ns else None
-
-
-def _round_n(round_id) -> int | None:
-    """Parse 'r15' / 'r05' / 15 → 15; None if unparseable."""
-    if isinstance(round_id, int):
-        return round_id
-    if isinstance(round_id, str) and round_id.lstrip("r").isdigit():
-        return int(round_id.lstrip("r"))
-    return None
 
 # Headline set: the flagship reference-parity scan-agg plus one
 # representative of each operator family (grouped agg, large join,
@@ -156,9 +114,9 @@ def calibration(spark) -> tuple[float, dict]:
     cost is constant by construction — a pinned-size numpy matmul (pure
     FLOPs, BLAS-threaded, so stolen cores show up) plus a 1-partition
     Spark job (JVM task-scheduling overhead under the same load) — is
-    timed with the same min-of-N discipline as the queries. Cross-round
-    slot comparisons should divide by the calibration ratio: a slot
-    that moved 1.2× while calibration moved 1.2× did not regress.
+    timed with the same min-of-N discipline as the queries. The record
+    carries it beside the timings: a slot that moved 1.2× while
+    calibration moved 1.2× did not regress.
 
     Returns (calibration_sec, detail): the summed min-of-samples of the
     two parts, and the per-part samples for BENCH_DETAIL.json.
@@ -168,7 +126,7 @@ def calibration(spark) -> tuple[float, dict]:
     a = (np.arange(1024 * 1024, dtype=np.float64) % 1013.0).reshape(
         1024, 1024
     ) / 1013.0
-    np_ts, spark_ts, par_ts = [], [], []
+    np_ts, spark_ts = [], []
     for _ in range(3):
         t0 = time.perf_counter()
         for _ in range(12):
@@ -179,27 +137,65 @@ def calibration(spark) -> tuple[float, dict]:
             "sum(id % 997) AS s"
         ).collect()
         spark_ts.append(time.perf_counter() - t0)
-        # RECORD-ONLY whole-host probe (not part of the calibration
-        # unit — adding it would redefine queries_min_per_cal and
-        # break the r12+ cross-round series): the same work fanned
-        # across every core. Co-tenancy that steals parallel
-        # throughput but not single-core burst shows up as
-        # spark_parallel_sec moving while the unit holds — the
-        # signature behind cal_shift_median, now measured directly.
-        t0 = time.perf_counter()
-        spark.range(0, 64_000_000, 1, 32).selectExpr(
-            "sum(id % 997) AS s"
-        ).collect()
-        par_ts.append(time.perf_counter() - t0)
     cal = round(min(np_ts) + min(spark_ts), 4)
     return cal, {
         "numpy_matmul_sec": round(min(np_ts), 4),
         "spark_1part_sec": round(min(spark_ts), 4),
-        "spark_parallel_sec": round(min(par_ts), 4),
         "numpy_samples": [round(t, 4) for t in np_ts],
         "spark_samples": [round(t, 4) for t in spark_ts],
-        "parallel_samples": [round(t, 4) for t in par_ts],
     }
+
+
+def summarize(
+    samples: dict[str, list[float]],
+    cold_pass0: dict[str, float],
+    cal_before: tuple[float, dict],
+    cal_after: tuple[float, dict],
+) -> tuple[dict[str, float], dict[str, float], dict]:
+    """The post-timing arithmetic, free of Spark and of disk.
+
+    Takes the timed samples per slot, the cold pass-0 times and the two
+    calibration() results that bracket the timed window. Returns
+    (timings, spread_flags, detail): per-slot medians (the headline),
+    the slots whose median is more than 2× their min, and the
+    BENCH_DETAIL.json record.
+    """
+    timings = {
+        name: round(statistics.median(ts), 4) for name, ts in samples.items()
+    }
+    # Noise floor: a co-tenant stall only ever ADDS time, so min-of-N is
+    # the contention-immune cost (observed: identical code measuring
+    # 12 s vs 71 s on dedup_minhash_lsh purely from machine load).
+    # Median stays the primary metric; the min makes a stalled run
+    # self-diagnosing instead of masquerading as a regression.
+    timings_min = {
+        name: round(min(ts), 4) for name, ts in samples.items()
+    }
+    # Contention self-labeling: identical plans on identical data should
+    # repeat within ~2×. A query whose median is >2× its min was stalled
+    # by co-tenant load in at least half its samples — flag it so a
+    # contended run reads as contended, not as a regression.
+    spread_flags = {
+        name: round(timings[name] / timings_min[name], 2)
+        for name in samples
+        if timings_min[name] > 0
+        and timings[name] / timings_min[name] > 2.0
+    }
+    detail = {
+        "queries_min": timings_min,
+        # first-invocation cost per slot (codegen + resident-artifact
+        # builds: the containment gram/bitset index, the LSH signature
+        # cache) — the COLD half of the cold/warm split; queries_min is
+        # the warm half
+        "queries_cold_pass0": cold_pass0,
+        # Calibration brackets the timed window (before + after): the
+        # min across both prices this run's contention floor on the
+        # same min-of-N basis as queries_min.
+        "calibration_sec": min(cal_before[0], cal_after[0]),
+        "calibration_before": cal_before[1],
+        "calibration_after": cal_after[1],
+    }
+    return timings, spread_flags, detail
 
 
 def main() -> None:
@@ -249,24 +245,20 @@ def main() -> None:
         except Exception:
             pass
 
-    # Pass 0 is ALSO the run's COLD measurement (r14 verdict #1): the
-    # first invocation of each slot pays codegen AND any resident-index
-    # build (the containment gram/bitset artifact, the LSH signature
-    # cache), while the timed min below prices the WARM steady state a
-    # resident cluster lives in. Reporting both on the same run makes
-    # the cached-artifact slots' cross-round trend explicit about which
-    # state it guards — queries_cold_pass0 vs queries_min in
-    # BENCH_DETAIL (cold is one sample, so it is reported, not the
-    # headline).
+    # Pass 0 is ALSO the run's COLD measurement: the first invocation
+    # of each slot pays codegen AND any resident-index build (the
+    # containment gram/bitset artifact, the LSH signature cache), while
+    # the timed min below prices the WARM steady state a resident
+    # cluster lives in. Reporting both on the same run makes the
+    # cached-artifact slots explicit about which state they measure —
+    # queries_cold_pass0 vs queries_min in BENCH_DETAIL (cold is one
+    # sample, so it is reported, not the headline).
     cold_pass0: dict[str, float] = {}
     for name in HEADLINE:
         t0 = time.perf_counter()
         qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         cold_pass0[name] = round(time.perf_counter() - t0, 4)
-    # Calibration brackets the timed window (before + after): the min
-    # across both prices this run's contention floor on the same
-    # min-of-N basis as queries_min below.
-    cal_before, cal_detail_before = calibration(spark)
+    cal_before = calibration(spark)
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for _ in range(ITERS):
         reclaim()
@@ -275,201 +267,16 @@ def main() -> None:
             df = qs[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             samples[name].append(time.perf_counter() - t0)
-    cal_after, cal_detail_after = calibration(spark)
-    calibration_sec = min(cal_before, cal_after)
-    timings = {
-        name: round(statistics.median(ts), 4) for name, ts in samples.items()
-    }
-    # Noise floor: a co-tenant stall only ever ADDS time, so min-of-N is
-    # the contention-immune cost (observed: identical code measuring
-    # 12 s vs 71 s on dedup_minhash_lsh purely from machine load).
-    # Median stays the primary metric; the min makes a stalled run
-    # self-diagnosing instead of masquerading as a regression.
-    timings_min = {
-        name: round(min(ts), 4) for name, ts in samples.items()
-    }
-    # Contention self-labeling: identical plans on identical data should
-    # repeat within ~2×. A query whose median is >2× its min was stalled
-    # by co-tenant load in at least half its samples — flag it so a
-    # contended run reads as contended, not as a regression.
-    spread_flags = {
-        name: round(timings[name] / timings_min[name], 2)
-        for name in HEADLINE
-        if timings_min[name] > 0
-        and timings[name] / timings_min[name] > 2.0
-    }
+    cal_after = calibration(spark)
+    timings, spread_flags, detail = summarize(
+        samples, cold_pass0, cal_before, cal_after
+    )
     if spread_flags:
         print(
             "bench: median/min spread >2x (machine contention likely): "
             + ", ".join(f"{k}={v}x" for k, v in spread_flags.items()),
             file=sys.stderr,
         )
-
-    # Partition-size sweep on the flagship scan-agg (the reference tunes
-    # the same axis with its rows-per-thread sweep,
-    # scripts/readerThreads.bash:3-7): smaller maxPartitionBytes = more
-    # splits = more parallelism but more per-task overhead. One timed
-    # run per size; the conf is read at plan time, so each run re-plans
-    # the scan. Informs the stripe-sized-partition stance in session.py.
-    sweep: dict[str, float] = {}
-    default_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    # try/finally: an exception mid-sweep must not leave a 1-16 MB
-    # partition size set for everything that runs after it
-    try:
-        for mb in (1, 4, 16, 128):
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", str(mb * 1024 * 1024)
-            )
-            # min of 2: a single sample per size is noisier than the
-            # axis being measured (a one-off stall inverts the curve)
-            ts = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs["q01_flagship_sum"](spark, SF_DIR).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
-            sweep[f"{mb}MB"] = round(min(ts), 4)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", default_mpb)
-
-    # Scaling slope: the same headline set at the 10×-smaller scale
-    # factor in the same process, and the per-query large/small ratio.
-    # A linear operator lands near the data ratio (≈10, minus fixed
-    # job overhead); a superlinear constant hiding at fixture scale
-    # shows up as a ratio well above it — the check that would have
-    # caught the r3 LSH cliff a round earlier. min-of-N at both scales
-    # keeps the ratio contention-immune.
-    small_timings: dict[str, float] = {}
-    scale_ratio: dict[str, float] = {}
-    if SLOPE_ITERS > 0 and os.path.isdir(SMALL_SF_DIR):
-        orc_table(spark, SMALL_SF_DIR, "lineitem")
-        for name in HEADLINE:  # untimed codegen pass at this scale
-            qs[name](spark, SMALL_SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        ssamples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-        for _ in range(SLOPE_ITERS):
-            reclaim()
-            for name in HEADLINE:
-                t0 = time.perf_counter()
-                qs[name](spark, SMALL_SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ssamples[name].append(time.perf_counter() - t0)
-        small_timings = {
-            name: round(min(ts), 4) for name, ts in ssamples.items()
-        }
-        scale_ratio = {
-            name: round(timings_min[name] / small_timings[name], 2)
-            for name in HEADLINE
-            if small_timings.get(name, 0) > 0
-        }
-
-    # Cross-round drift-free comparison (r12 verdict #2): divide this
-    # run's per-slot min by its calibration, then by the PREVIOUS
-    # round's recorded value of the same quotient (bench_prev_cal.json,
-    # snapshotted from the prior round's BENCH_DETAIL). The ratio is
-    # host-contention-free by construction; slots moving >1.25× either
-    # way are flagged as real movers to investigate, retiring the
-    # signature-based drift argument.
-    queries_min_per_cal = {
-        name: round(t / calibration_sec, 3)
-        for name, t in timings_min.items()
-        if calibration_sec > 0
-    }
-    prev_round, cal_vs_prev, cal_movers = None, {}, {}
-    cal_shift_median = None
-    cal_prev_stale = False
-    cur_round_n = current_round_n()
-    prev_path = os.path.join(_REPO_ROOT, "bench_prev_cal.json")
-    if os.path.exists(prev_path) and calibration_sec > 0:
-        with open(prev_path) as fh:
-            prev = json.load(fh)
-        prev_round = prev.get("round")
-        # Self-checking ritual (r15 verdict #5): the base must be the
-        # immediately-previous round's quotient. A stale or unstamped
-        # base is refused — recorded as cal_prev_stale so the round
-        # report shows WHY normalization is absent, instead of quietly
-        # comparing against a two-round-old base.
-        prev_n = _round_n(prev_round)
-        if cur_round_n is not None and prev_n != cur_round_n - 1:
-            cal_prev_stale = True
-            print(
-                f"bench: bench_prev_cal.json round={prev_round!r} is "
-                f"not r{cur_round_n - 1} (this run is r{cur_round_n}) "
-                "— REFUSING cross-round normalization; re-run the "
-                "round-start ritual (SURVEY §8.5)",
-                file=sys.stderr,
-            )
-            prev = {"queries_min_per_cal": {}}
-        for name, cur in queries_min_per_cal.items():
-            p = prev.get("queries_min_per_cal", {}).get(name)
-            if p:
-                cal_vs_prev[name] = round(cur / p, 3)
-        # A per-slot regression must stand out from the MEDIAN shift,
-        # not from 1.0: the probe is a single-core matmul + 1-partition
-        # Spark job, so co-tenancy that steals whole-host parallel
-        # throughput while leaving single-core burst speed intact moves
-        # EVERY normalized slot by the same factor (observed r13: all
-        # 17 common slots at ~1.7× with calibration 1.5× FASTER — a
-        # probe-profile artifact, not 17 simultaneous regressions). The
-        # median is that global factor; a real regression is a slot
-        # that moved relative to its peers.
-        # Median normalization needs enough overlapping slots for the
-        # median to BE the global factor (with 2-3 slots one real
-        # regression drags the median and hides itself); below the
-        # floor, fall back to absolute flagging.
-        if cal_vs_prev and len(cal_vs_prev) >= 5:
-            cal_shift_median = round(
-                statistics.median(cal_vs_prev.values()), 3
-            ) or 1.0  # degenerate all-zero ratios: don't divide by 0
-            for name, r in cal_vs_prev.items():
-                rel = round(r / cal_shift_median, 3)
-                if rel > 1.25 or rel < 0.8:
-                    cal_movers[name] = {
-                        "vs_prev": r,
-                        "vs_median_shift": rel,
-                    }
-            # a uniform shift is NOT exonerated — it is either probe-
-            # profile drift (co-tenancy stealing parallel throughput;
-            # check spark_parallel_sec) or a real engine-wide
-            # regression; surface it for the round report either way
-            if cal_shift_median > 1.25 or cal_shift_median < 0.8:
-                print(
-                    f"bench: GLOBAL normalized shift vs {prev_round}: "
-                    f"{cal_shift_median}x on all slots — compare "
-                    "spark_parallel_sec to separate host-profile "
-                    "drift from an engine-wide regression",
-                    file=sys.stderr,
-                )
-        elif cal_vs_prev:
-            # too few overlapping slots for a median: flag on the RAW
-            # vs-prev ratio under its own key (cal_shift_median stays
-            # None, so consumers can tell absolute from normalized)
-            for name, r in cal_vs_prev.items():
-                if r > 1.25 or r < 0.8:
-                    cal_movers[name] = {
-                        "vs_prev": r,
-                        "vs_prev_absolute": r,
-                    }
-        if cal_movers:
-            print(
-                f"bench: calibration-normalized movers vs {prev_round} "
-                f"(>1.25x vs the {cal_shift_median or 'absolute'} "
-                "median shift): "
-                + ", ".join(
-                    # dict.get's default evaluates EAGERLY — guard with
-                    # membership, not a default expression (a KeyError
-                    # here once crashed the bench after measurement but
-                    # before the detail file was written)
-                    f"{k}="
-                    f"""{v['vs_median_shift'] if 'vs_median_shift' in v
-                         else v['vs_prev_absolute']}x"""
-                    for k, v in cal_movers.items()
-                ),
-                file=sys.stderr,
-            )
 
     # Scan-agg throughput for the flagship (reference continuity metric).
     n_rows = qs["q05_metadata_count"](spark, SF_DIR).collect()[0][0]
@@ -480,50 +287,8 @@ def main() -> None:
     # window when the q44 slot was added (five per-query dicts × 14
     # slots) and the headline value came back unparseable. The printed
     # line therefore carries only the contract keys plus small scalars;
-    # the full diagnostics (per-query min, partition sweep, scaling
-    # slope) land in BENCH_DETAIL.json next to this script.
-    detail = {
-        # which round produced this file — the value the NEXT round's
-        # bench_prev_cal.json ritual copies, and the value this run's
-        # stale-base refusal checks against (r15 verdict #5)
-        "round": (f"r{cur_round_n}" if cur_round_n is not None else None),
-        "queries_min": timings_min,
-        # first-invocation cost per slot (codegen + resident-artifact
-        # builds: the containment gram/bitset index, the LSH signature
-        # cache) — the COLD half of the cold/warm split; queries_min is
-        # the warm half (r14 verdict #1)
-        "queries_cold_pass0": cold_pass0,
-        # Drift normalization (r11 verdict #2): per-slot min in units
-        # of this run's calibration time. Cross-round comparisons of
-        # THESE numbers are host-contention-free — a slot whose
-        # seconds moved with calibration_sec has not changed.
-        "calibration_sec": calibration_sec,
-        "calibration_before": cal_detail_before,
-        "calibration_after": cal_detail_after,
-        "queries_min_per_cal": queries_min_per_cal,
-        # the measured cross-round comparison that replaced the old
-        # signature-based drift_note: per-slot (min/cal) ratio vs the
-        # previous round's recorded value (1.0 = unchanged cost)
-        "cal_prev_round": prev_round,
-        # True when the base was refused for carrying the wrong round
-        # id (normalization keys below are then empty by construction)
-        "cal_prev_stale": cal_prev_stale,
-        "cal_normalized_vs_prev": cal_vs_prev,
-        # the global factor all slots moved by (probe-profile drift);
-        # movers below are relative to THIS, not to 1.0
-        "cal_shift_median": cal_shift_median,
-        "cal_normalized_movers": cal_movers,
-        "partition_sweep_q01": sweep,
-        "queries_small_sf": small_timings,
-        "scale_ratio": scale_ratio,
-        # present only when the slope pass actually ran, so an empty
-        # ratio map is distinguishable from a skipped pass
-        **(
-            {"small_sf": SMALL_SF_DIR.rstrip("/").rsplit("sf", 1)[-1]}
-            if small_timings
-            else {}
-        ),
-    }
+    # the full diagnostics (per-query min, cold pass, calibration
+    # samples) land in BENCH_DETAIL.json next to this script.
     try:
         with open(os.path.join(_REPO_ROOT, "BENCH_DETAIL.json"), "w") as fh:
             json.dump(detail, fh, indent=1)
@@ -533,14 +298,14 @@ def main() -> None:
     print(
         headline_json(
             timings=timings,
-            value_min=round(sum(timings_min.values()), 4),
+            value_min=round(sum(detail["queries_min"].values()), 4),
             spread_flags=spread_flags,
             sf=float(sf) if sf.replace(".", "").isdigit() else sf,
             lineitem_rows=n_rows,
             flagship_rows_per_sec=(
                 round(n_rows / flagship) if flagship else None
             ),
-            calibration_sec=calibration_sec,
+            calibration_sec=detail["calibration_sec"],
         )
     )
 
@@ -564,9 +329,9 @@ def headline_json(
         "queries": timings,
         "value_min": value_min,
         "spread_flags": spread_flags,
-        # fixed-workload contention price for this run; divide per-slot
-        # numbers by the cross-round calibration ratio before calling
-        # anything a regression (full per-part samples in BENCH_DETAIL)
+        # fixed-workload contention price for this run; two runs' slot
+        # times compare only beside their calibration ratio (full
+        # per-part samples in BENCH_DETAIL)
         **(
             {"calibration_sec": calibration_sec}
             if calibration_sec is not None

@@ -24,39 +24,14 @@ import threading
 from collections.abc import Callable
 from typing import Any
 
+from pim_orc_spark.fsutil import table_version
+
 _STORE: dict[tuple[str, str, str, float], Any] = {}
 _LOCK = threading.Lock()
 # Distinguish "not cached" from "build() legitimately returned None" —
 # with a plain .get(None) a None-valued artifact would rebuild on
 # every access.
 _MISS = object()
-
-
-def _dir_mtime(sf_dir: str) -> int:
-    """Version stamp for a table directory: the max of the directory's
-    own mtime and every direct entry's mtime, in integer NANOSECONDS
-    (st_mtime_ns — the float st_mtime would alias two generations
-    written within its ~µs resolution, and truncating to whole seconds
-    aliases anything inside one second). The directory mtime alone
-    changes only on entry add/remove/rename; an in-place same-name
-    file rewrite moves only the file's own mtime, so per-entry stats
-    are required for rewrites to invalidate. (Stats are shallow — one
-    listdir, no recursion — because every fixture table is a flat
-    directory or a single file; granularity is the filesystem's.)"""
-    try:
-        mt = os.stat(sf_dir).st_mtime_ns
-        if os.path.isdir(sf_dir):
-            for name in os.listdir(sf_dir):
-                try:
-                    mt = max(
-                        mt,
-                        os.stat(os.path.join(sf_dir, name)).st_mtime_ns,
-                    )
-                except OSError:
-                    continue
-        return mt
-    except OSError:
-        return 0
 
 
 def cached_artifact(
@@ -78,7 +53,7 @@ def cached_artifact(
     from pim_orc_spark.session import application_id
 
     app = application_id(spark)
-    key = (family, app, os.path.abspath(sf_dir), _dir_mtime(sf_dir))
+    key = (family, app, os.path.abspath(sf_dir), table_version(sf_dir))
     with _LOCK:
         stale_keys = [
             k

@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pim_orc_spark.fsutil import table_version
 from pim_orc_spark.session import ensure_parity_confs
 
 TABLE_NAMES = (
@@ -77,31 +78,18 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 # shared-plan cache broke cogroup's two nation-ranked sides with an
 # ambiguous-self-join analysis error). This is what a production
 # catalog does: schema resolved once at registration, not per query.
-# The mtime_ns key invalidates on fixture regeneration.
+# The table_version key invalidates on fixture regeneration.
 _SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_parity_confs(spark)
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    try:
-        # max of the entry's own mtime and (for a directory table) its
-        # direct children's — an in-place part-file rewrite moves only
-        # the file's mtime, not the directory entry's, and a stale
-        # schema served to read.schema() would surface as nulls or an
-        # analysis error (the artifacts._dir_mtime rule, r16 ADVICE).
-        mt = os.stat(path).st_mtime_ns
-        if os.path.isdir(path):
-            for child in os.listdir(path):
-                try:
-                    mt = max(
-                        mt, os.stat(os.path.join(path, child)).st_mtime_ns
-                    )
-                except OSError:
-                    continue
-    except OSError:
-        mt = -1
-    key = (path, mt)
+    # table_version stats a directory table's part files too: an
+    # in-place part-file rewrite moves only the file's mtime, and a
+    # stale schema served to read.schema() would surface as nulls or
+    # an analysis error.
+    key = (path, table_version(path))
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema

@@ -5,7 +5,8 @@ rename cache protocol used by every materialized artifact (ORC copies,
 the evolved-table cache, the pre-split stream source, the maintenance
 rewrites). One implementation so a protocol fix lands everywhere at
 once (round-5 review: three inline copies had drifted into a shared
-TOCTOU race).
+TOCTOU race). ``table_version`` is, for the same reason, the single
+version stamp every table-keyed cache uses.
 """
 
 from __future__ import annotations
@@ -16,6 +17,35 @@ import uuid
 from collections.abc import Callable
 
 MARKER = "_BUILD_COMPLETE"
+
+
+def table_version(path: str) -> int:
+    """Version stamp for a table path (a directory or a single file):
+    the max of the path's own mtime and, for a directory, every direct
+    entry's mtime, in integer NANOSECONDS (st_mtime_ns — the float
+    st_mtime would alias two generations written within its ~µs
+    resolution, and truncating to whole seconds aliases anything
+    inside one second). The directory mtime alone changes only on
+    entry add/remove/rename; an in-place same-name file rewrite moves
+    only the file's own mtime, so per-entry stats are required for
+    rewrites to invalidate. (Stats are shallow — one listdir, no
+    recursion — because every fixture table is a flat directory or a
+    single file; granularity is the filesystem's.) 0 when the path
+    does not exist."""
+    try:
+        mt = os.stat(path).st_mtime_ns
+        if os.path.isdir(path):
+            for name in os.listdir(path):
+                try:
+                    mt = max(
+                        mt,
+                        os.stat(os.path.join(path, name)).st_mtime_ns,
+                    )
+                except OSError:
+                    continue
+        return mt
+    except OSError:
+        return 0
 
 
 def atomic_build(path: str, build: Callable[[str], None]) -> str:
@@ -79,8 +109,8 @@ def atomic_build(path: str, build: Callable[[str], None]) -> str:
 
 def versioned_cache_dir(root: str, sf_dir: str, name: str) -> str:
     """Cache path for a materialization DERIVED from ``sf_dir``, keyed
-    by the source directory's version stamp (artifacts._dir_mtime —
-    max of the dir's and every direct entry's mtime, integer ns so two
+    by the source directory's version stamp (``table_version`` — max
+    of the dir's and every direct entry's mtime, integer ns so two
     generations inside the same second still get distinct keys).
 
     The driver regenerates /root/testdata between rounds, and round 3
@@ -91,11 +121,9 @@ def versioned_cache_dir(root: str, sf_dir: str, name: str) -> str:
     by construction — no invalidation protocol, just a different key.
     Old generations' directories leak until /tmp is cleared, which is
     the standard cache-key trade."""
-    from pim_orc_spark.artifacts import _dir_mtime
-
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     return os.path.join(
-        root, f"{sf_tag}.v{_dir_mtime(sf_dir)}", name
+        root, f"{sf_tag}.v{table_version(sf_dir)}", name
     )
 
 

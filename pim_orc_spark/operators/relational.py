@@ -4400,9 +4400,9 @@ def q73_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: degrees are one |E|-sized aggregate; the wedge self-join and
     the closing join are TWO key shuffles (on u, then on the (v,w)
     pair); membership explodes each found triangle to its 3 vertices
-    and aggregates — all relations |E|- or wedge-bounded, never |V|²,
-    and the tiny nation dimension broadcasts for the zero-filled
-    output. Oracle: the orientation-free canonical a<b<c 3-way
+    and aggregates — all relations |E|- or wedge-bounded, never |V|²;
+    a left join from the nation dimension zero-fills the output.
+    Oracle: the orientation-free canonical a<b<c 3-way
     self-join (the result is orientation-independent). The
     enumeration itself is the public ``triangle_counts`` kernel
     (property-tested against brute force on random graphs)."""
@@ -4420,8 +4420,7 @@ def q73_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_name"
     )
     return (
-        F.broadcast(nation)
-        .join(counts, nation.n_nationkey == counts.node, "left")
+        nation.join(counts, nation.n_nationkey == counts.node, "left")
         .select(
             F.col("n_nationkey").alias("nationkey"),
             "n_name",

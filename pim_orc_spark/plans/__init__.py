@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pim_orc_spark.fsutil import table_version
+
 
 def require_query_execution(df: DataFrame):
     """The executed-plan metrics helpers below are the package's ONE
@@ -55,7 +57,7 @@ def explode_nonempty(col: Column | str) -> Column:
     return F.explode_outer(c)
 
 
-# (path, st_mtime_ns) → parquet footer row count. Footer metadata only
+# (path, table_version) → parquet footer row count. Footer metadata only
 # (never data pages), same invalidation rule as catalog._SCHEMA_CACHE.
 _ROWS_CACHE: dict[tuple[str, int], int] = {}
 
@@ -65,8 +67,6 @@ def _input_rows(df: DataFrame) -> int | None:
     footers — plan metadata plus one cached footer read per file, no
     Spark job. None when the plan has no file inputs or a footer is
     unreadable (non-parquet source)."""
-    import os
-
     try:
         files = df.inputFiles()
     except Exception:
@@ -76,10 +76,7 @@ def _input_rows(df: DataFrame) -> int | None:
     total = 0
     for f in files:
         path = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            key = (path, os.stat(path).st_mtime_ns)
-        except OSError:
-            return None
+        key = (path, table_version(path))
         rows = _ROWS_CACHE.get(key)
         if rows is None:
             try:

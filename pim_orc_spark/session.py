@@ -101,14 +101,12 @@ def ensure_parity_confs(spark: SparkSession) -> SparkSession:
     """Assert runtime confs on an externally-created session (the driver
     owns its own SparkSession; every ``queries()`` callable routes through
     here so results are deterministic regardless of who built the session).
+    Every conf is a runtime conf and a failure to set one raises: a
+    silently-missing timezone, Arrow or AQE conf would change results or
+    plans without a trace.
     """
     for k, v in PARITY_RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Conf may be static in some deployments; results must not
-            # depend on it then.
-            pass
+        spark.conf.set(k, v)
     return spark
 
 

@@ -42,12 +42,13 @@ from pim_orc_spark.functions.numeric import (
     exact_sum,
     exact_sum_sql,
 )
+from pim_orc_spark.fsutil import table_version
 from pim_orc_spark.session import ensure_parity_confs
 
 WINDOW = "10 minutes"
 
 
-# (path, mtime_ns) → schema: a stream's declared schema is immutable
+# (path, table_version) → schema: a stream's declared schema is immutable
 # per file generation; re-inferring it from the footer on every query
 # START (each bench iteration, each test) re-paid a batch footer read
 # + plan analysis (~0.14 s/start measured at r16). A production stream
@@ -62,11 +63,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch catalog exactly."""
     ensure_parity_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    try:
-        mt = os.stat(path).st_mtime_ns
-    except OSError:
-        mt = -1
-    skey = (os.path.abspath(path), mt)
+    skey = (os.path.abspath(path), table_version(path))
     schema = _STREAM_SCHEMA_CACHE.get(skey)
     if schema is None:
         schema = spark.read.parquet(path).schema

@@ -406,6 +406,34 @@ def test_versioned_cache_dir_invalidates_on_source_change(tmp_path):
     assert p2 != p1
 
 
+def test_part_file_rewrite_refreshes_batch_and_stream_schemas(spark, tmp_path):
+    """Both schema caches key a table by fsutil.table_version, which
+    stats a directory table's part files: rewriting
+    events.parquet/part-0.parquet in place with a new column (the
+    directory's own mtime pinned back) must reach the batch catalog
+    and the stream source alike, never a stale cached schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pim_orc_spark.catalog import load_table
+    from pim_orc_spark.streaming.stream_events import read_events_stream
+
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    part = table / "part-0.parquet"
+    pq.write_table(pa.table({"user_id": [1, 2]}), part)
+    assert load_table(spark, str(tmp_path), "events").columns == ["user_id"]
+    assert read_events_stream(spark, str(tmp_path)).columns == ["user_id"]
+
+    dstat = os.stat(table)
+    pq.write_table(pa.table({"user_id": [1, 2], "extra": ["a", "b"]}), part)
+    os.utime(part, ns=(dstat.st_atime_ns, dstat.st_mtime_ns + 10**10))
+    os.utime(table, ns=(dstat.st_atime_ns, dstat.st_mtime_ns))
+    want = ["user_id", "extra"]
+    assert load_table(spark, str(tmp_path), "events").columns == want
+    assert read_events_stream(spark, str(tmp_path)).columns == want
+
+
 def test_vacuum_removes_only_stale_generations(tmp_path):
     """VACUUM keeps the live generation of every current source,
     removes stale version-stamped generations, and never touches
@@ -850,8 +878,9 @@ def test_orc_footer_reader_cross_validates_against_jvm(spark, sf_dir, tmp_path):
     """The pure-Python ORC footer parser (sources/orc_footer.py) is
     validated against the independent implementation whose output it
     replaced: for the SAME files — the snappy-framed engine cache, the
-    reference's own checked-in fixture, and fresh NONE- and
-    ZLIB-compressed writes — every planning fact (stripe count,
+    reference's own checked-in fixture when it is present, and fresh
+    NONE-, ZLIB- and multi-stripe SNAPPY-compressed writes (the last
+    with the reference's writer options) — every planning fact (stripe count,
     per-stripe rows, total rows, codec, block size, stride) must equal
     what the JVM ORC reader returns (the pycms/pysnappy discipline).
     The snappy cases also prove functions/pysnappy.py decodes REAL ORC
@@ -873,18 +902,31 @@ def test_orc_footer_reader_cross_validates_against_jvm(spark, sf_dir, tmp_path):
     )[:2]
     if os.path.exists(REF_FIXTURE):
         files.append(REF_FIXTURE)
-    for codec in ("none", "zlib"):
+    writes = {
+        "none": {"compression": "none"},
+        "zlib": {"compression": "zlib"},
+        # a small stripe size, checked every 1000 rows, splits 25k rows
+        # of an incompressible column into several stripes
+        "snappy": {
+            **orc_io.REFERENCE_ORC_OPTIONS,
+            "orc.stripe.size": "65536",
+            "orc.rows.between.memory.checks": "1000",
+        },
+    }
+    for codec, options in writes.items():
         out = str(tmp_path / f"orc_{codec}")
         (
             spark.range(0, 25000)
-            .selectExpr("id", "id * 2 AS v")
+            .selectExpr("id", "xxhash64(id) AS v")
             .coalesce(1)
             .write.mode("overwrite")
-            .option("compression", codec)
+            .options(**options)
             .orc(out)
         )
         files.extend(glob.glob(os.path.join(out, "*.orc")))
     assert len(files) >= 4
+    (snappy,) = glob.glob(str(tmp_path / "orc_snappy" / "*.orc"))
+    assert read_orc_footer_facts(snappy)["num_stripes"] > 1
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     for f in files:
