@@ -23,6 +23,14 @@ Scale design:
   rotate-and-block at scale). Map-only + one groupBy shuffle.
 - ``dedup_embedding_cosine`` — cosine near-dup pairs; all-pairs at
   fixture scale, LSH-bucketed variant in similarity.py for scale.
+
+Every Jaccard and containment engine (MinHash narrow and wide, the
+bitset and n-gram twins, the all-pairs and both prefix containment
+engines) shares one verify kernel: ``_inter`` counts a bitset
+intersection by AND+popcount, ``_size_gate`` is the lossless size-ratio
+prefilter, and ``_verified`` decides ``round(ratio, 6) >= T`` with an
+exact long compare (``_round6_boundary``), so ``round()`` runs once per
+output pair, in the final projection, never in a join condition.
 """
 
 from __future__ import annotations
@@ -228,8 +236,8 @@ def _gate_fraction(threshold: float | None = None):
     (0.4999 → 1/2), which would make the "lossless" gate lossy — a pair
     with J ≥ t but size ratio in (fr', t) would be wrongly pruned. When
     the compact fraction rounds up, fall back to the exact-or-below
-    10⁻⁶-grid truncation; an import-time assert below pins the
-    invariant for the default threshold. Guarantees: fr ≤ t always
+    10⁻⁶-grid truncation; the assert below pins the invariant on
+    every call. Guarantees: fr ≤ t always
     (losslessness — the correctness property), and fr > t − 1/1000
     (limit_denominator(1000)'s worst-case gap, hit when the nearest
     small-denominator fraction sits below t — e.g. 71/126 at
@@ -251,60 +259,101 @@ def _gate_fraction(threshold: float | None = None):
 
 def _round6_boundary(threshold: float) -> int:
     """The exact integer-arithmetic form of the verify predicate
-    ``round(n / sz, 6) >= threshold`` (Spark HALF_UP double round):
-    returns odd ``B`` such that the predicate ⟺ ``2_000_000·n ≥ B·sz``
-    for every integer 0 ≤ n ≤ sz ≤ 10⁵ (the gram/shingle-count
-    domain). Derivation: round(x, 6) ≥ T compares the double nearest
-    k/10⁶ (k = half-up of x·10⁶) against the double T; by
-    monotonicity that holds iff k ≥ K where K is the smallest integer
-    with double(K/10⁶) ≥ T (computed below by direct search — Python
-    and Java both produce the correctly-rounded double for k/10⁶),
-    iff x ≥ (2K−1)/(2·10⁶) with x = double(n/sz). The exact rational
-    n/sz can never equal that boundary (B = 2K−1 is odd and shares no
-    factor 2·10⁶ with sz ≤ 10⁵: equality needs 2·10⁶ | B·sz, i.e.
-    2⁷·5⁶ | sz — impossible), so it sits ≥ 1/(2·10⁶·sz) ≥ 5·10⁻¹²
-    away, far beyond the ≤ 2⁻⁵³ double-division error — the EXACT
-    integer compare and the double compare agree on every row.
-    Pinned exhaustively against Spark's own round in
-    tests/test_dedup.py::test_containment_integer_gate_matches_round_filter."""
+    ``round(n / d, 6) >= threshold`` (Spark HALF_UP double round):
+    returns ``B`` such that the predicate ⟺ ``2_000_000·n > B·d`` for
+    every pair of integers 0 ≤ n ≤ d < 2·10⁶ — containment's d = |A|
+    and Jaccard's d = |A| + |B| − n both sit far inside that range.
+
+    Derivation: round(x, 6) ≥ T compares the double nearest k/10⁶
+    (k = half-up of x·10⁶) against the double T; by monotonicity that
+    holds iff k ≥ K, where K is the smallest integer with
+    double(K/10⁶) ≥ T (found below by direct search — Python and Java
+    both produce the correctly-rounded double for k/10⁶), iff
+    x ≥ B/(2·10⁶) with B = 2K − 1 and x = double(n/d). B is odd and,
+    by the assert, not a multiple of 5, so gcd(B, 2·10⁶) = 1: the
+    exact rational n/d equals B/(2·10⁶) only if 2·10⁶ | d, impossible
+    for 0 < d < 2·10⁶. It therefore sits ≥ 1/(2·10⁶·d) > 2.5·10⁻¹³
+    from the boundary, far beyond the ≤ 2⁻⁵³ error of the double
+    division, so the EXACT integer compare and the double compare
+    agree on every pair. Because equality is impossible, the strict
+    ``>`` is the same predicate, and it also rejects d = 0, where n/d
+    is NULL and the round filter never passes. Pinned against Spark's
+    own round in
+    tests/test_dedup.py::test_containment_integer_gate_matches_round_filter
+    and ::test_jaccard_integer_gate_matches_round_filter."""
     k = int(threshold * 10**6) - 2
     while not (k / 10**6) >= threshold:
         k += 1
-    return 2 * k - 1
+    bnd = 2 * k - 1
+    assert bnd % 5 != 0, f"boundary {bnd} of {threshold} shares 5 with 10⁶"
+    return bnd
 
 
-def _size_gate(sza: str, szb: str) -> Column:
-    """Lossless size-ratio prefilter: J ≥ t forces min(|A|,|B|) /
-    max(|A|,|B|) ≥ t (the intersection can never exceed the smaller
-    set), so two integer multiply-compares discard a candidate pair
-    before the per-pair set intersect. The same gate ``bitset_pairs``
-    and ``dedup_ngram_jaccard`` already run; in the LSH engine it is
-    wired into the WIDE verify path only — there it fronts a real
-    O(|A|+|B|) array_intersect over already-DISTINCT candidates. It
-    is deliberately ABSENT from the narrow inline path: that join
-    condition runs on the fallback evaluator ~once per colliding band
-    pair, extra conjuncts cost real time there, and the tiny-dictionary
-    corpora that take that branch have concentrated doc sizes the gate
-    cannot prune (measured +21% calibration-normalized on the benched
-    slot before being backed out)."""
-    fr = _gate_fraction()
-    return (F.col(sza) * fr.denominator >= F.col(szb) * fr.numerator) & (
-        F.col(szb) * fr.denominator >= F.col(sza) * fr.numerator
+def _size_gate(sza, szb, threshold: float, symmetric: bool) -> Column:
+    """Lossless size-ratio prefilter over two set sizes (column names
+    or Columns): |A∩B| ≤ |B|, so n/|A| ≥ t forces |B|·den ≥ |A|·num,
+    and a ``symmetric`` (Jaccard) ratio ≥ t forces the mirrored compare
+    too. num/den = _gate_fraction(threshold) ≤ t keeps it lossless, so
+    one or two integer multiply-compares discard a pair before its set
+    intersection. Every engine that has a per-pair intersection to
+    skip runs it: the reference twins, the wide MinHash verify and
+    both containment prefix engines. The narrow MinHash path leaves
+    it out on purpose: its verify runs inside the band-join condition,
+    where every extra conjunct costs per candidate, and the tiny
+    dictionaries that take that branch have concentrated doc sizes the
+    gate cannot prune (measured +21% on the benched sf0.1 slot)."""
+    sza, szb = (F.col(c) if isinstance(c, str) else c for c in (sza, szb))
+    fr = _gate_fraction(threshold)
+    gate = szb * fr.denominator >= sza * fr.numerator
+    if symmetric:
+        gate = gate & (sza * fr.denominator >= szb * fr.numerator)
+    return gate
+
+
+def _inter(nb: int, a: str, b: str) -> Column:
+    """|A∩B| of two ``nb``-word bitsets as unrolled AND+popcount: flat
+    codegen arithmetic, no per-pair lambda or array allocation. ``a``
+    and ``b`` name an array<long> column, or carry a ``{w}`` field that
+    names flat per-word long columns (``"m{w}_a"``)."""
+
+    def word(c: str, w: int) -> Column:
+        return F.col(c.format(w=w)) if "{w}" in c else F.col(c).getItem(w)
+
+    return _tree_sum(
+        [F.bit_count(word(a, w).bitwiseAND(word(b, w))) for w in range(nb)]
     )
 
 
-def _popcount_jaccard(
-    nb: int, ma: str = "ma", mb: str = "mb", sza: str = "sza", szb: str = "szb"
-) -> Column:
-    """Jaccard of two bitsets (ma/sza vs mb/szb) as unrolled AND+popcount:
-    flat codegen arithmetic, no per-pair lambda/array allocation."""
-    inter = _tree_sum(
-        [
-            F.bit_count(F.col(ma).getItem(w).bitwiseAND(F.col(mb).getItem(w)))
-            for w in range(nb)
-        ]
-    )
-    return inter.cast("double") / (F.col(sza) + F.col(szb) - inter)
+def _verified(pairs: DataFrame, name: str, distinct: bool = False) -> DataFrame:
+    """The one verify decision of every Jaccard and containment engine.
+
+    ``pairs`` is (key_a, key_b, n_common, sza[, szb]). ``name``
+    "jaccard" tests n / (sza + szb − n) against JACCARD_T; "containment"
+    tests n / sza against CONTAIN_T. Both thresholds are read at call
+    time. ``round(ratio, 6) >= T`` is decided by _round6_boundary's
+    exact long compare — for Jaccard ``(2·10⁶ + B)·n > B·(sza + szb)``,
+    the same predicate with d = sza + szb − n, so the intersection
+    appears once when Catalyst pushes the gate into a join condition.
+    round() runs only in the final projection, on the survivors, after
+    the DISTINCT when ``distinct`` is set (the inline engines emit a
+    pair once per colliding band or gram). A round kept in a filter
+    would be pushed into the join condition too, where Spark's Round
+    builds a BigDecimal per candidate row."""
+    a, b = pairs.columns[:2]
+    n, sza = F.col("n_common"), F.col("sza")
+    if name == "jaccard":
+        bnd = _round6_boundary(JACCARD_T)
+        both = sza + F.col("szb")
+        gate = n.cast("long") * (2_000_000 + bnd) > both.cast("long") * bnd
+        ratio = n.cast("double") / (both - n)
+    else:
+        bnd = _round6_boundary(CONTAIN_T)
+        gate = n.cast("long") * 2_000_000 > sza.cast("long") * bnd
+        ratio = n.cast("double") / sza
+    out = pairs.where(gate)
+    if distinct:
+        out = out.distinct()
+    return out.select(a, b, F.round(ratio, 6).alias(name))
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,20 +363,21 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _grams(spark, sf_dir)
     a = g.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
     b = g.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"))
-    inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
-    uni = F.size("ga") + F.size("gb") - inter
-    jac = inter.cast("double") / uni
-    # Lossless size gate (J ≥ t ⇒ min/max set-size ratio ≥ t): skips the
-    # string-array intersect for pairs that cannot pass.
-    fr = _gate_fraction()
-    gate = (F.size("ga") * fr.denominator >= F.size("gb") * fr.numerator) & (
-        F.size("gb") * fr.denominator >= F.size("ga") * fr.numerator
+    pairs = a.crossJoin(b).select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("ga", "gb")).alias("n_common"),
+        F.size("ga").alias("sza"),
+        F.size("gb").alias("szb"),
     )
-    return (
-        a.crossJoin(b)
-        .filter((F.col("doc_a") < F.col("doc_b")) & gate)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
+    # the size gate skips the string-array intersect for pairs that
+    # cannot pass
+    return _verified(
+        pairs.filter(
+            (F.col("doc_a") < F.col("doc_b"))
+            & _size_gate("sza", "szb", JACCARD_T, symmetric=True)
+        ),
+        "jaccard",
     )
 
 
@@ -395,7 +445,6 @@ def _salted_band_candidates(
     salt: int = LSH_SALT,
     hot_threshold: int | None = None,
     payload: tuple[str, ...] = (),
-    n_bands: int = LSH_BANDS,
     hot: tuple[DataFrame, bool] | None = None,
 ) -> DataFrame:
     """Self-join ``banded`` (doc_id, band, key) on (band, key) with hot
@@ -424,16 +473,6 @@ def _salted_band_candidates(
        on exactly one (band, key, salt) — output is IDENTICAL to the
        unsalted join — but a hot bucket's work now spreads across
        ``salt`` tasks, each holding ~1/salt of the bucket's left rows.
-
-    First-collision dedup: when ``banded`` carries a ``keys`` column
-    (each doc's full per-band key array), a pair colliding in k bands
-    is emitted ONCE — in the lowest colliding band only (both sides see
-    both key arrays at the join, so "no earlier band matched" is a pure
-    codegen predicate). This replaces a DISTINCT over the generated
-    pair set — O(candidates) shuffled rows, the single most expensive
-    stage on a high-background-similarity corpus — with a per-row
-    filter at zero shuffle cost. Without ``keys`` the raw multiset is
-    returned (a pair repeats once per colliding band).
 
     Cost when nothing is hot: just the count pass (partial-agg,
     metadata-sized shuffle) — the driver checks the hot set ONCE and
@@ -475,60 +514,10 @@ def _salted_band_candidates(
     from pim_orc_spark.session import default_parallelism
 
     n_parts = default_parallelism(banded.sparkSession) * 2
-    with_keys = "keys" in banded.columns
     pair_filter = F.col("doc_a") < F.col("doc_b")
-    if with_keys:
-        # Earliest-band-wins: keep the pair only where no lower band
-        # already collided. Emitted as a flat CASE over the band index
-        # with one cumulative OR chain per branch — pure codegen long
-        # compares that short-circuit on the first hit.
-        #
-        # This exact formulation is measured, not aesthetic. The filter
-        # lands in the merge-join CONDITION, evaluated once per
-        # candidate row pair BEFORE the join filters — ~100M
-        # evaluations at sf0.1, so per-pair evaluation cost decides the
-        # stage's wall clock. Any full first-collision predicate plus
-        # the inline Jaccard exceeds janino's 64 KB method limit in the
-        # join-condition context (no statement splitting there), so
-        # this stage runs on Spark's fallback evaluator either way —
-        # what differs between formulations is fallback cost. A/B on
-        # identical input (local[32], interleaved samples):
-        #   or-chain CASE (this form)            ~4-5 s
-        #   flat first-colliding-band CASE       ~29 s  (array gets in
-        #     every branch walked; this form guards each branch with an
-        #     int compare and touches arrays only in ONE branch)
-        #   AND-of-(band<=t OR ka[t]!=kb[t])     ~39 s  (no early-out)
-        #   exists(zip_with(slice(...)))  (HOF)  ~19 s  (two slice +
-        #     one zipped array ALLOCATED per evaluated pair)
-        # ``n_bands`` must cover every band index in ``banded``: a band
-        # beyond the CASE would skip suppression and silently re-emit
-        # its pairs, so callers with a different banding pass theirs.
-        cum = None
-        branch = F.when(F.lit(False), F.lit(True))  # seed; never matches
-        for t in range(1, n_bands):
-            term = F.col("ka").getItem(t - 1) == F.col("kb").getItem(t - 1)
-            cum = term if cum is None else cum | term
-            branch = branch.when(F.col("band") == t, cum)
-        earlier_hit = branch.otherwise(F.lit(False))  # band = 0
-        # Runtime guard for the n_bands/banded coupling: a keys array
-        # wider than the CASE covers would skip suppression for its
-        # uncovered bands and silently duplicate pairs — fail loudly
-        # instead. assert_true returns NULL (isNull ⇒ true) when the
-        # invariant holds and raises otherwise; one array-size compare
-        # per joined row, negligible next to the band-key equality.
-        keys_covered = F.assert_true(
-            F.size(F.col("ka")) <= F.lit(n_bands),
-            F.lit(
-                "banded 'keys' has more bands than n_bands covers — "
-                "first-collision suppression would emit duplicates"
-            ),
-        ).isNull()
-        pair_filter = pair_filter & keys_covered & ~earlier_hit
 
-    def side(alias: str, key_alias: str, suffix: str):
+    def side(alias: str, suffix: str):
         cols = [F.col("doc_id").alias(alias), "band", "key"]
-        if with_keys:
-            cols.append(F.col("keys").alias(key_alias))
         cols.extend(F.col(c).alias(f"{c}_{suffix}") for c in payload)
         return cols
 
@@ -550,11 +539,11 @@ def _salted_band_candidates(
     # class hits janino's 64 KB fallback.
     if hot_empty:
         left = (
-            banded.select(*side("doc_a", "ka", "a"))
+            banded.select(*side("doc_a", "a"))
             .repartition(n_parts, "band", "key")
             .hint("shuffle_merge")
         )
-        right = banded.select(*side("doc_b", "kb", "b")).repartition(
+        right = banded.select(*side("doc_b", "b")).repartition(
             n_parts, "band", "key"
         )
         return (
@@ -564,7 +553,7 @@ def _salted_band_candidates(
         )
     tagged = banded.join(F.broadcast(hot_df), ["band", "key"], "left")
     left = tagged.select(
-        *side("doc_a", "ka", "a"),
+        *side("doc_a", "a"),
         F.when(
             F.col("is_hot"), F.pmod(F.xxhash64("doc_id"), F.lit(salt))
         )
@@ -573,7 +562,7 @@ def _salted_band_candidates(
         .alias("salt"),
     ).repartition(n_parts, "band", "key", "salt").hint("shuffle_merge")
     right = tagged.select(
-        *side("doc_b", "kb", "b"),
+        *side("doc_b", "b"),
         F.explode(
             F.when(
                 F.col("is_hot"), F.sequence(F.lit(0), F.lit(salt - 1))
@@ -608,24 +597,25 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
          banded rows and verification evaluates INSIDE the band-join
          condition — the candidate set never materializes, never
          shuffles, and the generated condition is small enough to stay
-         in compiled codegen. A wider dictionary (toward the 740-word
-         char-3-gram ceiling, or a token-feature variant) flips BOTH
-         stages: the signature build collects exact dictionary-index
-         SETS (O(1) per gram — the dense bit_or form costs O(nb) per
-         gram, which between fixture scale and dictionary saturation
-         is effectively quadratic in the corpus; caught by
-         tests/test_scale_slope.py), and verification becomes
-         exactly-once candidates via a first-collision-band filter
-         followed by two candidate-keyed index-set attach joins with
-         hash-based array_intersect. Same threshold-style runtime
-         choice Spark itself makes between broadcast and shuffle
-         joins; both paths are oracle-identical and tested.
+         in compiled codegen. A wider dictionary (past 64 words = 4096
+         grams: a diverse corpus, or a token-feature variant) flips
+         BOTH stages: the signature build collects exact
+         dictionary-index SETS (O(1) per gram — the dense bit_or form
+         costs O(nb) per gram, which between fixture scale and
+         dictionary saturation is effectively quadratic in the corpus;
+         caught by tests/test_scale_slope.py), and verification runs on
+         skinny band rows whose candidates are DISTINCTed, then
+         size-gated and checked by hash-based array_intersect after two
+         candidate-keyed index-set attach joins. Same threshold-style
+         runtime choice Spark itself makes between broadcast and
+         shuffle joins; both paths are oracle-identical and tested.
       4. Exactly-once output: the inline path DISTINCTs the verified
          SURVIVORS — |result| × colliding-band multiplicity rows, a
          metadata-sized shuffle (round 3 paid a ~20M-row candidate
-         DISTINCT here; verification-first shrinks it ~10⁴×). The
-         wide path needs no distinct (first-collision already emitted
-         exactly once).
+         DISTINCT here; verification-first shrinks it ~10⁴×). The wide
+         path DISTINCTs its skinny candidates before the attach joins.
+         Both decide ``round(J, 6) >= JACCARD_T`` with ``_verified``'s
+         exact long gate and round only the output pairs.
     """
     # SIGNATURE INDEX REUSE: production MinHash dedup maintains doc
     # signatures as a PERSISTENT index (they change only when documents
@@ -700,9 +690,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs_from_sigs(per_doc, nb, hot=(hot_df, hot_empty))
 
 
-def _empty_pairs(spark: SparkSession) -> DataFrame:
+def _empty_pairs(
+    spark: SparkSession, a: str = "doc_a", b: str = "doc_b", ratio: str = "jaccard"
+) -> DataFrame:
     """The contract schema for a pair query over an empty corpus."""
-    return spark.createDataFrame([], "doc_a long, doc_b long, jaccard double")
+    return spark.createDataFrame([], f"{a} long, {b} long, {ratio} double")
 
 
 def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -864,35 +856,18 @@ def _pairs_from_sigs(
         # sf0.1, interleaved: 3.12 s → 2.42 s min-of-3 (on top of the
         # repartition pinning). Bounded by CARRY_MASK_MAX_WORDS = 64
         # columns per side by construction of this branch.
-        inter = _tree_sum(
-            [
-                F.bit_count(
-                    F.col(f"m{w}_a").bitwiseAND(F.col(f"m{w}_b"))
-                )
-                for w in range(nb)
-            ]
-        )
-        jac = inter.cast("double") / (
-            F.col("sz_a") + F.col("sz_b") - inter
-        )
         # Inline verify-then-distinct: mask+size ride the banded rows
         # (WITHOUT the keys array — 32 longs/row lighter through the
-        # shuffle), the Jaccard test evaluates INSIDE the join
+        # shuffle), the exact Jaccard gate evaluates INSIDE the join
         # condition, and the few rows that survive (true near-dup
         # pairs × their colliding-band multiplicity, ≤ 32×|result|)
-        # are deduplicated by a metadata-sized DISTINCT. Round 3
-        # replaced a DISTINCT over the ~20M-row CANDIDATE set with a
-        # first-collision codegen filter; with verification inline the
-        # DISTINCT moves to the ~10³-row SURVIVOR set, which is
-        # cheaper than the filter it replaces AND keeps the join
-        # condition small enough to actually compile (the
-        # first-collision CASE pushed the generated condition past
-        # janino's 64 KB limit, dropping the whole stage to Spark's
-        # fallback evaluator — measured 3-5× slower across the ~100M
-        # condition evaluations this corpus generates). A pair
-        # colliding in k bands pays k Jaccard evaluations (~4 on this
-        # corpus) of ~3 instructions per mask word — still far below
-        # one fallback-evaluated CASE walk.
+        # are deduplicated by a metadata-sized DISTINCT. That is
+        # cheaper than any per-row first-collision filter over the
+        # ~100M candidate rows this corpus generates: round 4 measured
+        # such a CASE chain pushing the condition past janino's 64 KB
+        # limit, onto Spark's fallback evaluator, 3-5× slower. A pair
+        # colliding in k bands pays k gate evaluations (~4 on this
+        # corpus) of ~3 instructions per mask word.
         mask_cols = tuple(f"m{w}" for w in range(nb))
         banded = per_doc.select(
             "doc_id",
@@ -906,80 +881,59 @@ def _pairs_from_sigs(
         cands = _salted_band_candidates(
             banded,
             payload=(*mask_cols, "sz"),
-            n_bands=LSH_BANDS,
             hot=hot,
         )
-        # NO _size_gate here, deliberately: this branch's verify runs
-        # inside the join condition on the FALLBACK evaluator (see
-        # _salted_band_candidates' A/B table), where every extra
-        # conjunct costs real per-candidate time, and the corpus class
-        # that reaches this branch (tiny dictionary ⇒ concentrated doc
-        # sizes) is exactly where the gate prunes ~nothing — measured
-        # +21% on the benched sf0.1 slot (calibration-normalized)
-        # before being backed out. The gate pays off in the wide
-        # branch below, where it short-circuits a per-pair set
-        # intersect and the candidates are already DISTINCT-reduced.
-        return (
-            cands.select(
-                "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-            )
-            .filter(F.col("jaccard") >= JACCARD_T)
-            .distinct()
+        # NO _size_gate here, deliberately (see its docstring): every
+        # extra conjunct in this join condition costs per candidate,
+        # and the tiny-dictionary corpora that reach this branch have
+        # concentrated doc sizes the gate cannot prune.
+        pairs = cands.select(
+            "doc_a",
+            "doc_b",
+            _inter(nb, "m{w}_a", "m{w}_b").alias("n_common"),
+            F.col("sz_a").alias("sza"),
+            F.col("sz_b").alias("szb"),
         )
-    else:
-        # Wide-dictionary path: banded rows stay skinny and the exact
-        # dictionary-index SETS are attached to the (smaller-per-row)
-        # candidate set with two doc-keyed joins — shuffle
-        # O(candidates × |gset|) instead of O(docs × bands × mask) —
-        # and verification intersects the index sets directly
-        # (array_intersect, hash-based O(|A|+|B|): the same order of
-        # work as walking a saturated dense mask, without stage 1 ever
-        # paying O(nb) per gram to build one; see _doc_signatures).
-        # Skinny banded rows + DISTINCT, not first-collision: carrying
-        # the 32-long keys array through the band self-join makes the
-        # sort-merge input ~13× heavier per row, and on the corpus
-        # class that REACHES this path (wide dictionary ⇒ high gram
-        # diversity ⇒ low background J) candidates ≈ true pairs — a
-        # DISTINCT over them is metadata-sized, so paying the array
-        # haulage to avoid it is backwards (measured 16× → near-linear
-        # one-decade slope on the 19.6k-gram synthetic corpus,
-        # tests/test_scale_slope.py). The candidate-dense adversarial
-        # corpora that justify first-collision take the narrow branch
-        # above by construction (tiny vocabulary ⇒ tiny dictionary).
-        banded = per_doc.select(
-            "doc_id", F.posexplode("keys").alias("band", "key")
+        return _verified(pairs, "jaccard", distinct=True)
+    # Wide-dictionary path: banded rows stay skinny and the exact
+    # dictionary-index SETS are attached to the (smaller-per-row)
+    # candidate set with two doc-keyed joins — shuffle
+    # O(candidates × |gset|) instead of O(docs × bands × mask) — and
+    # verification intersects the index sets directly (array_intersect,
+    # hash-based O(|A|+|B|): the same order of work as walking a
+    # saturated dense mask, without stage 1 ever paying O(nb) per gram
+    # to build one; see _doc_signatures). Skinny banded rows + DISTINCT:
+    # carrying the 32-long keys array through the band self-join (the
+    # old first-collision filter) made the sort-merge input ~13×
+    # heavier per row, and on the corpus class that REACHES this path
+    # (wide dictionary ⇒ high gram diversity ⇒ low background J)
+    # candidates ≈ true pairs, so the DISTINCT over them is
+    # metadata-sized (measured 16× → near-linear one-decade slope on
+    # the 19.6k-gram synthetic corpus, tests/test_scale_slope.py).
+    banded = per_doc.select("doc_id", F.posexplode("keys").alias("band", "key"))
+
+    def attach(side: str) -> DataFrame:
+        return per_doc.select(
+            F.col("doc_id").alias(f"doc_{side}"),
+            F.col("gset").alias(f"gset_{side}"),
+            F.col("sz").alias(f"sz{side}"),
         )
-        cands = (
-            _salted_band_candidates(banded, n_bands=LSH_BANDS, hot=hot)
-            .distinct()
-            .join(
-                per_doc.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("gset").alias("gset_a"),
-                    F.col("sz").alias("sz_a"),
-                ),
-                "doc_a",
-            )
-            .join(
-                per_doc.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("gset").alias("gset_b"),
-                    F.col("sz").alias("sz_b"),
-                ),
-                "doc_b",
-            )
-            .filter(_size_gate("sz_a", "sz_b"))
-            .withColumn(
-                "n_common",
-                F.size(F.array_intersect("gset_a", "gset_b")),
-            )
+
+    cands = (
+        _salted_band_candidates(banded, hot=hot)
+        .distinct()
+        .join(attach("a"), "doc_a")
+        .join(attach("b"), "doc_b")
+        .filter(_size_gate("sza", "szb", JACCARD_T, symmetric=True))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("gset_a", "gset_b")).alias("n_common"),
+            "sza",
+            "szb",
         )
-        jac = F.col("n_common") / (
-            F.col("sz_a") + F.col("sz_b") - F.col("n_common")
-        )
-    return cands.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= JACCARD_T)
+    )
+    return _verified(cands, "jaccard")
 
 
 def lsh_band_candidates(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -999,7 +953,7 @@ def lsh_band_candidates(spark: SparkSession, docs: DataFrame) -> DataFrame:
     banded = per_doc.select(
         "doc_id", F.posexplode("keys").alias("band", "key")
     )
-    return _salted_band_candidates(banded, n_bands=LSH_BANDS).distinct()
+    return _salted_band_candidates(banded).distinct()
 
 
 def dedup_bitset_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,6 +978,25 @@ def dedup_bitset_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bitset_pairs(spark, load_table(spark, sf_dir, "documents"))
 
 
+def _all_pairs(
+    spark: SparkSession, docs: DataFrame, ka: str, kb: str
+) -> tuple[DataFrame | None, int]:
+    """The all-pairs twins' pair source: every ordered (ka, kb) doc pair
+    with bitsets ma/mb and set sizes sza/szb, as a broadcast
+    nested-loop join, and the mask width nb; (None, 0) for an empty
+    corpus. The probe side is repartitioned explicitly: otherwise AQE
+    coalesces the tiny encoded input to ONE partition and the O(n²)
+    loop runs on a single core (measured 149s → 6s)."""
+    enc, nb = _bitset_encode(spark, _grams_of(spark, docs))
+    if nb == 0:
+        return None, 0
+    a = enc.repartition(default_parallelism(spark) * 2).selectExpr(
+        f"doc_id AS {ka}", "mask AS ma", "sz AS sza"
+    )
+    b = enc.selectExpr(f"doc_id AS {kb}", "mask AS mb", "sz AS szb")
+    return a.crossJoin(F.broadcast(b)), nb
+
+
 def bitset_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """The all-pairs bitset engine behind ``dedup_bitset_jaccard``,
     usable on ANY (doc_id, text) DataFrame — the quadratic ground-truth
@@ -1031,41 +1004,20 @@ def bitset_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     synthetic low-background-similarity corpus to measure the LSH
     candidate ratio and wall-clock advantage the module docstring
     claims). Semantics: see ``dedup_bitset_jaccard``."""
-    g = _grams_of(spark, docs)
-    enc, nb = _bitset_encode(spark, g)
-    if nb == 0:
-        # empty corpus: no pairs (see minhash_pairs' identical guard)
-        return spark.createDataFrame(
-            [], "doc_a long, doc_b long, jaccard double"
-        )
-    # The pair stage is a broadcast nested-loop join; without an explicit
-    # repartition, AQE coalesces the tiny encoded input to ONE partition
-    # and the O(n²) loop runs on a single core (measured 149s → 6s).
-    n_parts = default_parallelism(spark) * 2
-    a = enc.repartition(n_parts).select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("mask").alias("ma"),
-        F.col("sz").alias("sza"),
+    pairs, nb = _all_pairs(spark, docs, "doc_a", "doc_b")
+    if pairs is None:
+        return _empty_pairs(spark)
+    # the size gate, in the join condition, discards a pair on two
+    # comparisons before any popcount work
+    pairs = pairs.filter(
+        (F.col("doc_a") < F.col("doc_b"))
+        & _size_gate("sza", "szb", JACCARD_T, symmetric=True)
     )
-    b = enc.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("mask").alias("mb"),
-        F.col("sz").alias("szb"),
-    )
-    jac = _popcount_jaccard(nb)
-    # Size-ratio prefilter: |A∩B| ≤ min(|A|,|B|), so J ≥ t requires
-    # min/max ≥ t. Evaluated as part of the join condition it discards a
-    # pair on two comparisons before any popcount work.
-    fr = _gate_fraction()
-    t_num, t_den = fr.numerator, fr.denominator  # integer math in the gate
-    size_gate = (F.col("sza") * t_den >= F.col("szb") * t_num) & (
-        F.col("szb") * t_den >= F.col("sza") * t_num
-    )
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter((F.col("doc_a") < F.col("doc_b")) & size_gate)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
+    return _verified(
+        pairs.select(
+            "doc_a", "doc_b", _inter(nb, "ma", "mb").alias("n_common"), "sza", "szb"
+        ),
+        "jaccard",
     )
 
 
@@ -1101,46 +1053,19 @@ def containment_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     ANY (doc_id, text) DataFrame — same convention as ``bitset_pairs``
     / ``minhash_pairs``. Semantics and scale notes: see
     ``dedup_containment``."""
-    g = _grams_of(spark, docs)
-    enc, nb = _bitset_encode(spark, g)
-    if nb == 0:
-        return spark.createDataFrame(
-            [], "doc_inner long, doc_outer long, containment double"
-        )
-    n_parts = default_parallelism(spark) * 2
-    a = enc.repartition(n_parts).select(
-        F.col("doc_id").alias("doc_inner"),
-        F.col("mask").alias("ma"),
-        F.col("sz").alias("sza"),
+    pairs, nb = _all_pairs(spark, docs, "doc_inner", "doc_outer")
+    if pairs is None:
+        return _empty_pairs(spark, "doc_inner", "doc_outer", "containment")
+    pairs = pairs.filter(
+        (F.col("doc_inner") != F.col("doc_outer"))
+        & (F.col("sza") >= CONTAIN_MIN_GRAMS)
+        & _size_gate("sza", "szb", CONTAIN_T, symmetric=False)
     )
-    b = enc.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("mask").alias("mb"),
-        F.col("sz").alias("szb"),
-    )
-    inter = _tree_sum(
-        [
-            F.bit_count(F.col("ma").getItem(w).bitwiseAND(F.col("mb").getItem(w)))
-            for w in range(nb)
-        ]
-    )
-    fr = _gate_fraction(CONTAIN_T)
-    # asymmetric gate: inter ≤ |B|, so C = inter/|A| ≥ t ⇒ |B|·den ≥ |A|·num
-    gate = F.col("szb") * fr.denominator >= F.col("sza") * fr.numerator
-    containment = F.round(inter.cast("double") / F.col("sza"), 6)
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter(
-            (F.col("doc_inner") != F.col("doc_b"))
-            & (F.col("sza") >= CONTAIN_MIN_GRAMS)
-            & gate
-        )
-        .select(
-            "doc_inner",
-            F.col("doc_b").alias("doc_outer"),
-            containment.alias("containment"),
-        )
-        .filter(F.col("containment") >= CONTAIN_T)
+    return _verified(
+        pairs.select(
+            "doc_inner", "doc_outer", _inter(nb, "ma", "mb").alias("n_common"), "sza"
+        ),
+        "containment",
     )
 
 
@@ -1205,16 +1130,16 @@ def _containment_grams_artifact(
 
 def _prefix_and_posting(g: DataFrame):
     """The shared pigeonhole machinery of the prefix-filter engines
-    over a (doc_id, grams) frame: returns ``(prefix, per_gram,
-    (num, den))`` where ``prefix`` is the (doc_id, gram, sz) rows
-    surviving the rare-first pigeonhole bound, ``per_gram`` is the
-    exploded posting relation, and num/den is the integer gate
-    fraction. Callers must pass a MATERIALIZED frame (localCheckpoint):
-    this stage explodes it three ways (prefix side, posting side,
-    sizes), and plain ``explode`` is used because the word-shingle
-    path can produce EMPTY gram arrays (token-free text) — explode
-    drops them; the InferFiltersFromGenerate hazard explode_nonempty
-    exists for does not apply to a materialized column."""
+    over a (doc_id, grams) frame: returns ``(prefix, per_gram, sz)``
+    where ``prefix`` is the (doc_id, gram, sz) rows surviving the
+    rare-first pigeonhole bound, ``per_gram`` is the exploded posting
+    relation and ``sz`` the (doc_id, sz) set sizes. Callers must pass
+    a MATERIALIZED frame (localCheckpoint): this stage explodes it
+    three ways (prefix side, posting side, sizes), and plain
+    ``explode`` is used because the word-shingle path can produce
+    EMPTY gram arrays (token-free text) — explode drops them; the
+    InferFiltersFromGenerate hazard explode_nonempty exists for does
+    not apply to a materialized column."""
     per_gram = g.select(
         "doc_id", F.explode("grams").alias("gram")
     )
@@ -1237,7 +1162,7 @@ def _prefix_and_posting(g: DataFrame):
             f"rnk <= sz - ((({num}L * sz) + {den} - 1) div {den}) + 1"
         )
     )
-    return prefix, per_gram, sz, (num, den)
+    return prefix, per_gram, sz
 
 
 def _containment_prefix_candidates(g: DataFrame) -> DataFrame:
@@ -1252,7 +1177,7 @@ def _containment_prefix_candidates(g: DataFrame) -> DataFrame:
     verify step attaches unbounded gram ARRAYS, which must ride a
     candidate-distinct-sized join, not the full pre-distinct
     multiplicity."""
-    prefix, per_gram, sz, (num, den) = _prefix_and_posting(g)
+    prefix, per_gram, sz = _prefix_and_posting(g)
     # posting side carries szb (broadcast dim join, map-side) so the
     # asymmetric size gate prunes BEFORE the candidate distinct — on
     # the dense fixture that halves the distinct's shuffle input; the
@@ -1278,7 +1203,7 @@ def _containment_prefix_candidates(g: DataFrame) -> DataFrame:
         )
         .join(posting, "gram")
         .where("doc_inner <> doc_b")
-        .where(f"szb * {den} >= sza * {num}")
+        .where(_size_gate("sza", "szb", CONTAIN_T, symmetric=False))
         .select("doc_inner", "doc_b", "sza")
         .distinct()
     )
@@ -1367,17 +1292,7 @@ def _prefix_pairs_from_artifact(
     fallback (and the word-shingle engine keeps it unconditionally —
     its verify payload is unbounded gram arrays)."""
     if nb == 0:
-        return spark.createDataFrame(
-            [], "doc_inner long, doc_outer long, containment double"
-        )
-    inter = _tree_sum(
-        [
-            F.bit_count(
-                F.col("ma").getItem(w).bitwiseAND(F.col("mb").getItem(w))
-            )
-            for w in range(nb)
-        ]
-    )
+        return _empty_pairs(spark, "doc_inner", "doc_outer", "containment")
     if nb <= CARRY_MASK_MAX_WORDS and "idxs" in enc.columns:
         # INDEX-SPACE candidate join (r16, second pass): the artifact's
         # dictionary is RARE-FIRST ordered and each enc row carries its
@@ -1456,25 +1371,16 @@ def _prefix_pairs_from_artifact(
         # row, and this select used to evaluate it on every surviving
         # (pair, gram) occurrence — a thread dump of the verify stage
         # showed ~30 of 32 workers RUNNABLE inside BigDecimal.<init>.
-        # The pre-distinct pipeline now stays in LONG arithmetic:
-        # popcount plus ``2e6·n ≥ B·sz``, the provably-EXACT integer
-        # form of ``round(n/sz, 6) >= CONTAIN_T`` (_round6_boundary —
-        # it fully REPLACES the round-filter: a filter kept after the
-        # distinct gets pushed back below it by Catalyst, re-inlining
-        # the BigDecimal round AND a second popcount into the join
-        # condition, which is also the round-4 fallback-evaluator
-        # hazard), then a distinct on (pair, n_common, sza) — integers
-        # that determine containment 1:1 — and round() runs once per
-        # DISTINCT pair in the aggregate's result projection (~200×
-        # fewer evaluations on the fixture). Output identity:
-        # sorted-collect MD5 equal on sf0.1 (160,775 pairs), boundary
-        # pinned exhaustively in test_containment_integer_gate_*.
-        # Interleaved A/B min-of-7: 1.57 s (inline round) → 1.30 s.
-        bnd = _round6_boundary(CONTAIN_T)
-        return (
+        # The pre-distinct pipeline stays in LONG arithmetic
+        # (_verified's exact gate), the distinct runs on (pair,
+        # n_common, sza) — integers that determine containment 1:1 —
+        # and round() runs once per DISTINCT pair (~200× fewer
+        # evaluations on the fixture). Interleaved A/B min-of-7:
+        # 1.57 s (inline round) → 1.30 s.
+        pairs = (
             prefix.join(posting, "idx")
             .where("doc_inner <> doc_b")
-            .where(f"szb * {den} >= sza * {num}")
+            .where(_size_gate("sza", "szb", CONTAIN_T, symmetric=False))
             .where(
                 f"{num} * sza <= {den} * (sza - i0)"
                 f" AND {num} * sza <= {den} * (szb - j0)"
@@ -1483,28 +1389,15 @@ def _prefix_pairs_from_artifact(
             .select(
                 "doc_inner",
                 F.col("doc_b").alias("doc_outer"),
-                inter.alias("n_common"),
+                _inter(nb, "ma", "mb").alias("n_common"),
                 "sza",
             )
-            .where(f"n_common * 2000000L >= sza * {bnd}L")
-            .distinct()
-            .select(
-                "doc_inner",
-                "doc_outer",
-                F.round(
-                    F.col("n_common").cast("double") / F.col("sza"), 6
-                ).alias("containment"),
-            )
         )
-    cand = _containment_prefix_candidates(g)
-    # Same long-arithmetic verify as the narrow branch above: popcount
-    # + the exact integer form of the round-filter per candidate
-    # (_round6_boundary — it IS the filter), round() only on the
-    # survivors (candidates here are already-distinct pairs, so no
-    # distinct is needed).
-    bnd = _round6_boundary(CONTAIN_T)
-    return (
-        cand.join(
+        return _verified(pairs, "containment", distinct=True)
+    # the wide fallback's candidates are already distinct pairs
+    pairs = (
+        _containment_prefix_candidates(g)
+        .join(
             enc.select(
                 F.col("doc_id").alias("doc_inner"),
                 F.col("mask").alias("ma"),
@@ -1521,18 +1414,11 @@ def _prefix_pairs_from_artifact(
         .select(
             "doc_inner",
             F.col("doc_b").alias("doc_outer"),
-            inter.alias("n_common"),
+            _inter(nb, "ma", "mb").alias("n_common"),
             "sza",
         )
-        .where(f"n_common * 2000000L >= sza * {bnd}L")
-        .select(
-            "doc_inner",
-            "doc_outer",
-            F.round(
-                F.col("n_common").cast("double") / F.col("sza"), 6
-            ).alias("containment"),
-        )
     )
+    return _verified(pairs, "containment")
 
 
 def containment_pairs_prefix_words(
@@ -1557,9 +1443,9 @@ def containment_pairs_prefix_words(
         )
         .localCheckpoint()  # candidate stage + two verify joins reuse it
     )
-    cand = _containment_prefix_candidates(g)
-    return (
-        cand.join(
+    pairs = (
+        _containment_prefix_candidates(g)
+        .join(
             g.select(
                 F.col("doc_id").alias("doc_inner"),
                 F.col("grams").alias("ga"),
@@ -1576,14 +1462,11 @@ def containment_pairs_prefix_words(
         .select(
             "doc_inner",
             F.col("doc_b").alias("doc_outer"),
-            F.round(
-                F.size(F.array_intersect("ga", "gb")).cast("double")
-                / F.col("sza"),
-                6,
-            ).alias("containment"),
+            F.size(F.array_intersect("ga", "gb")).alias("n_common"),
+            "sza",
         )
-        .filter(F.col("containment") >= CONTAIN_T)
     )
+    return _verified(pairs, "containment")
 
 
 def dedup_containment_prefix_words(

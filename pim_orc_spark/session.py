@@ -110,6 +110,24 @@ def ensure_parity_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 24g.
+
+    Local mode: the driver heap IS the executor memory — all task
+    slots, shuffle/state stores and Arrow batch allocations share it.
+    8g on a 32-thread, large-memory box caused measurable GC pressure
+    (Arrow-heavy ANN queries degraded later shuffle queries ~1.5×), so
+    big hosts get 24g. A fixed 24g on a smaller host is a heap the OS
+    cannot back: the JVM grows into it and is OOM-killed instead of
+    collecting or spilling (15 GiB, no swap). Half leaves room for the
+    JVM's off-heap memory, Python workers and the OS. On a real
+    cluster this knob is irrelevant — executor memory is sized
+    per-node and the driver only coordinates.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(phys_mb // 2, 24 << 10)}m"
+
+
 def get_spark(app_name: str = "pim_orc_spark", cpus: int | None = None) -> SparkSession:
     """Build (or get) the engine's SparkSession.
 
@@ -123,14 +141,10 @@ def get_spark(app_name: str = "pim_orc_spark", cpus: int | None = None) -> Spark
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
-        # Local mode: the driver heap IS the executor memory — all
-        # `cpus` task slots, shuffle/state stores, AND Arrow batch
-        # allocations share it. 8g on a 32-thread box caused measurable
-        # GC pressure (Arrow-heavy ANN queries degraded subsequent
-        # shuffle queries ~1.5×); 24g restores steady-state timings.
-        # On a real cluster this knob is irrelevant — executor memory
-        # is sized per-node and the driver only coordinates.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Whole-stage-codegen class cache sized to the RESIDENT WORKLOAD,

@@ -431,41 +431,88 @@ def test_containment_mask_attach_strategy_is_output_invariant(
     assert "BroadcastHashJoin" in plan, plan[:1500]
 
 
+def _gate_mismatches(grid, name):
+    """Rows of ``grid`` (id, n_common, sza[, szb]) on which the engines'
+    shared exact verify gate (dedup._verified) and Spark's own
+    ``round(ratio, 6) >= T`` filter disagree, plus the number of rows
+    each keeps."""
+    from pyspark.sql import functions as F
+
+    n, sza = F.col("n_common"), F.col("sza")
+    if name == "jaccard":
+        t, ratio = dedup.JACCARD_T, n.cast("double") / (sza + F.col("szb") - n)
+    else:
+        t, ratio = dedup.CONTAIN_T, n.cast("double") / sza
+    rounded = grid.where(F.round(ratio, 6) >= t).select("id")
+    gated = dedup._verified(
+        grid.select("id", F.lit(0).alias("k"), *grid.columns[1:]), name
+    ).select("id")
+    wrong = gated.exceptAll(rounded).count() + rounded.exceptAll(gated).count()
+    return wrong, gated.count(), grid.count()
+
+
+# Denominators past the exhaustive range: a coarse sweep plus the values
+# nearest the boundary's failure modes (powers of two, multiples of 5).
+_SWEEP = sorted(
+    set(range(601, 4097, 97))
+    | {2**k + e for k in range(10, 13) for e in (-1, 0, 1)}
+    | {625, 1000, 1250, 2000, 2500, 3125, 3200, 4000, 4095, 4096}
+)
+
+
 def test_containment_integer_gate_matches_round_filter(spark):
     """r17: the verify pipeline REPLACES the per-row
     ``round(n/sz, 6) >= CONTAIN_T`` filter (a BigDecimal construction
     per occurrence, and — kept post-distinct — pushed back into the
     join condition by Catalyst) with the exact LONG predicate
-    ``2e6·n ≥ B·sz`` from _round6_boundary. Exhaustively over every
-    (n_common, sza) with sza ≤ 600, the two predicates must agree —
-    pinned with Spark's own round/compare semantics, not a Python
-    replica — and the grid must exercise both sides of the boundary."""
-    from pyspark.sql import functions as F
-
+    ``2e6·n > B·sz`` from _round6_boundary. Over every (n_common, sza)
+    with sza ≤ 600, and every n_common of a coarse-plus-near-boundary
+    sza sweep up to the 4096-gram narrow-mask domain, the two must
+    agree — pinned with Spark's own round/compare semantics, not a
+    Python replica — and both sides of the boundary must be hit."""
     from pim_orc_spark.operators.dedup import CONTAIN_T, _round6_boundary
 
     bnd = _round6_boundary(CONTAIN_T)
-    assert bnd % 2 == 1  # odd by construction: boundary can't be hit
-    grid = spark.range(1, 601).selectExpr(
-        "id AS sza", "explode(sequence(0, id)) AS n_common"
+    assert bnd % 2 == 1 and bnd % 5 != 0  # coprime to 2·10⁶
+    szs = spark.createDataFrame([(s,) for s in _SWEEP], "sza long")
+    grid = (
+        spark.range(1, 601).selectExpr("id AS sza").unionByName(szs)
+        .selectExpr("sza", "explode(sequence(0, sza)) AS n_common")
+        .selectExpr("monotonically_increasing_id() AS id", "n_common", "sza")
+        .localCheckpoint()
     )
-    both = grid.select(
-        "sza",
-        "n_common",
-        (
-            F.col("n_common") * F.lit(2_000_000) >= F.col("sza") * F.lit(bnd)
-        ).alias("gate"),
-        (
-            F.round(
-                F.col("n_common").cast("double") / F.col("sza"), 6
-            )
-            >= F.lit(CONTAIN_T)
-        ).alias("rounded"),
+    wrong, kept, total = _gate_mismatches(grid, "containment")
+    assert wrong == 0
+    assert 0 < kept < total  # the grid exercises both sides
+
+
+def test_jaccard_integer_gate_matches_round_filter(spark):
+    """The Jaccard form of the same gate, ``(2e6 + B)·n > B·(sza +
+    szb)``, is ``round(n/d, 6) >= JACCARD_T`` with d = sza + szb − n.
+    Checked against Spark's own round over (n, sza, szb) triples for
+    every n of every denominator d ≤ 600 and of a coarse-plus-near-
+    boundary sweep of d up to 8192 (the sizes of a triple with n common
+    grams and union d split the rest of d between the two sets)."""
+    from pim_orc_spark.operators.dedup import JACCARD_T, _round6_boundary
+
+    bnd = _round6_boundary(JACCARD_T)
+    assert bnd % 2 == 1 and bnd % 5 != 0
+    ds = sorted(set(_SWEEP) | {s + 4096 for s in _SWEEP if s < 4096} | {8191, 8192})
+    dd = spark.createDataFrame([(d,) for d in ds], "d long")
+    grid = (
+        spark.range(1, 601).selectExpr("id AS d").unionByName(dd)
+        .selectExpr("d", "explode(sequence(0, d)) AS n_common")
+        .selectExpr(
+            "monotonically_increasing_id() AS id",
+            "n_common",
+            "n_common + (d - n_common) div 2 AS sza",
+            "d - (d - n_common) div 2 AS szb",
+        )
+        .localCheckpoint()
     )
-    assert both.filter("gate != rounded").count() == 0
-    # the grid exercises both sides of the boundary
-    assert both.filter("gate").count() > 0
-    assert both.filter("NOT gate").count() > 0
+    wrong, kept, total = _gate_mismatches(grid, "jaccard")
+    assert wrong == 0
+    assert 0 < kept < total
 
 
 def test_clusters_edge_source_has_no_cross_join(spark, sf_dir):
@@ -578,23 +625,6 @@ def test_salted_band_candidates_bounds_bucket(spark):
     assert max_group < n_hot // 2, max_group
 
 
-def test_salted_band_candidates_rejects_uncovered_bands(spark):
-    """A keys array wider than the first-collision CASE covers would
-    silently duplicate pairs; the runtime guard must raise instead."""
-    from pyspark.sql import functions as F
-
-    banded = (
-        spark.range(4)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.array(F.lit(1), F.lit(2), F.lit(3)).alias("keys"),
-        )
-        .select("doc_id", "keys", F.posexplode("keys").alias("band", "key"))
-    )
-    with pytest.raises(Exception, match="more bands than n_bands"):
-        dedup._salted_band_candidates(banded, n_bands=2).collect()
-
-
 def test_pair_engines_handle_empty_corpus(spark):
     """An empty documents table must yield an empty pair set with the
     contract schema — not a crash building 0-word masks (a fresh
@@ -646,7 +676,7 @@ def test_lsh_candidate_reduction_and_pair_parity(spark, monkeypatch):
 
     # Candidate volume: with the Jaccard threshold disabled, the LSH
     # engine's output IS its post-banding candidate set (exactly-once
-    # per pair via the first-collision filter).
+    # per pair via the DISTINCT over the band-join candidates).
     monkeypatch.setattr(dedup, "JACCARD_T", -1.0)
     n_candidates = dedup.minhash_pairs(spark, docs).count()
     monkeypatch.undo()

@@ -179,6 +179,31 @@ def test_lsh_band_join_is_sort_merge(spark, sf_dir):
     assert "SortMergeJoin" in plan, plan[:1500]
 
 
+def test_dedup_verify_rounds_only_after_the_gate(spark, sf_dir, monkeypatch):
+    """The pair engines decide ``round(ratio, 6) >= T`` with an exact
+    long compare and round only the surviving pairs: no join condition
+    and no filter of the executed plan may contain ``round(`` — Spark's
+    Round builds a BigDecimal per row, and a join condition evaluates
+    it once per candidate. Covers the MinHash narrow branch, its wide
+    branch (CARRY_MASK_MAX_WORDS = 0) and the containment prefix
+    engine."""
+    from pim_orc_spark.operators import dedup
+
+    def offending(df):
+        df.collect()  # the final adaptive plan, not only the initial one
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [
+            line
+            for line in plan.splitlines()
+            if ("Join" in line or "Filter" in line) and "round(" in line
+        ]
+
+    assert offending(dedup.dedup_minhash_lsh(spark, sf_dir)) == []
+    assert offending(dedup.dedup_containment_prefix(spark, sf_dir)) == []
+    monkeypatch.setattr(dedup, "CARRY_MASK_MAX_WORDS", 0)
+    assert offending(dedup.dedup_minhash_lsh(spark, sf_dir)) == []
+
+
 def test_bag_set_ops_plan_has_no_join(spark, sf_dir):
     """INTERSECT ALL / EXCEPT ALL must plan as count-aggregate +
     generate replication — a join-based rewrite would explode on
