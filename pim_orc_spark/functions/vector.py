@@ -62,40 +62,30 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product unrolled over a known dimension: ``dim``
-    multiply-adds of flat codegen arithmetic. The HOF form (``dot``)
-    interprets ~3 expression nodes per element per evaluation; unrolled,
-    a 12M-pair cosine join at dim=64 drops from interpreted lambda
-    stepping to straight-line arithmetic. Only valid when every vector
-    has exactly ``dim`` elements (fixture contract)."""
-    acc = None
-    for i in range(dim):
-        term = a.getItem(i) * b.getItem(i)
-        acc = term if acc is None else acc + term
-    return acc
-
-
 def dot_unrolled_sql(a: str, b: str, dim: int) -> str:
-    """The same unrolled dot product as ``dot_unrolled``, but as ONE
-    Spark-SQL expression string over column NAMES. Building the
-    unrolled form with Column algebra costs ~3·dim py4j round-trips
-    PER DOT (~0.6 s at dim=64 — measured dominating iterative plans
-    that construct many dots, e.g. k-means' three-dot distance built
-    three times per run); parsing one string is a single gateway call
-    with identical semantics — left-associated adds, element_at null
-    behavior — so results are bit-identical to the Column form."""
+    """Dot product unrolled over a known dimension, as ONE Spark-SQL
+    expression string over column NAMES: ``dim`` multiply-adds of flat
+    codegen arithmetic. The HOF form (``dot``) interprets ~3 expression
+    nodes per element per evaluation; unrolled, a 12M-pair cosine join
+    at dim=64 drops from interpreted lambda stepping to straight-line
+    arithmetic. Built with Column algebra instead, the same expression
+    costs ~3·dim gateway round trips PER DOT (~0.6 s at dim=64 —
+    measured dominating iterative plans that construct many dots, e.g.
+    k-means' three-dot distance built three times per run); parsing one
+    string is a single call. Adds are left-associated, so the sum order
+    (and every cosine) is fixed. Only valid when every vector has
+    exactly ``dim`` elements (fixture contract)."""
     return "(" + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)) + ")"
 
 
-def unit_vec(a: Column, dim: int) -> Column:
-    """L2-normalized copy of ``a``, norm evaluated ONCE per row: the
-    scalar 1/‖a‖ is let-bound through a single-element-array transform
-    (referenced directly inside the per-element lambda it would be
-    re-folded per element — see textfns.char_ngrams)."""
-    inv = 1.0 / F.sqrt(dot_unrolled(a, a, dim))
+def unit_vec(a: str, dim: int) -> Column:
+    """L2-normalized copy of column ``a``, norm evaluated ONCE per row:
+    the scalar 1/‖a‖ is let-bound through a single-element-array
+    transform (referenced directly inside the per-element lambda it
+    would be re-folded per element — see textfns.char_ngrams)."""
+    inv = 1.0 / F.sqrt(F.expr(dot_unrolled_sql(a, a, dim)))
     return F.transform(
-        F.array(inv), lambda s: F.transform(a, lambda x: x * s)
+        F.array(inv), lambda s: F.transform(F.col(a), lambda x: x * s)
     ).getItem(0)
 
 

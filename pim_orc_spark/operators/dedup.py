@@ -53,7 +53,7 @@ from pim_orc_spark.functions.textfns import char_ngrams, char_ngrams_sql, tokens
 from pim_orc_spark.functions.vector import (
     as_double_vec,
     cosine_sql,
-    dot_unrolled,
+    dot_unrolled_sql,
     unit_vec,
 )
 from pim_orc_spark.plans import explode_nonempty, spread
@@ -75,10 +75,16 @@ LSH_SALT = 8  # sub-buckets a hot band key is split into
 # threshold salted this corpus's template buckets and ran 2-5× slower
 # than the unsalted join of the same pairs).
 LSH_HOT_BUCKET = 10_000
-# Verify-attach strategy threshold: bitsets at most this many 64-bit
-# words (512 B) ride the banded rows so Jaccard verification is inline
-# in the band join; wider masks are attached to the (smaller-per-row)
-# candidate set with two doc-keyed joins instead. See dedup_minhash_lsh.
+# The MinHash engine's narrow/wide bound: a gram dictionary of at most
+# this many 64-bit words (4096 grams, a 512 B mask) is built as bit_or
+# words inside the fused signature aggregate and rides the banded rows
+# as flat long columns, so Jaccard verification is inline in the band
+# join; a wider dictionary collects exact index sets instead and
+# attaches them to the (smaller-per-row) candidate set with two
+# doc-keyed joins. See dedup_minhash_lsh. It also bounds that
+# aggregate's width at 1 + MINHASH_K + 64 = 193 output fields, which
+# spark.sql.codegen.maxFields (session.PARITY_RUNTIME_CONFS) must cover
+# for the aggregate to stay in whole-stage codegen.
 CARRY_MASK_MAX_WORDS = 64
 # Posting-mask attach strategy bound (r17): the containment engine's
 # index-space join attaches the posting side's verify bitset AFTER the
@@ -217,17 +223,19 @@ def _bitset_encode(
     return enc.localCheckpoint(), nb
 
 
-def _tree_sum(cols: list[Column]) -> Column:
-    """Sum columns as a BALANCED binary tree (depth log₂ n), not a
-    left-nested chain (depth n): a wide-dictionary corpus makes these
-    sums hundreds of terms, and a chain that deep overflows the
-    analyzer's recursion before the query even runs."""
-    while len(cols) > 1:
-        cols = [
-            cols[i] + cols[i + 1] if i + 1 < len(cols) else cols[i]
-            for i in range(0, len(cols), 2)
+def _tree_sum_sql(terms: list[str]) -> str:
+    """Sum SQL terms as a BALANCED parenthesized tree (depth log₂ n),
+    not a left-nested chain (depth n): a wide-dictionary corpus makes
+    these sums hundreds of terms (containment's ``_inter`` runs at
+    hundreds of words), and the parser and analyzer recurse once per
+    nesting level, so a chain that deep overflows the JVM stack before
+    the query even runs."""
+    while len(terms) > 1:
+        terms = [
+            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
+            for i in range(0, len(terms), 2)
         ]
-    return cols[0]
+    return terms[0]
 
 
 def _gate_fraction(threshold: float | None = None):
@@ -310,17 +318,19 @@ def _size_gate(sza, szb, threshold: float, symmetric: bool) -> Column:
     return gate
 
 
-def _inter(nb: int, a: str, b: str) -> Column:
+def _inter(nb: int, a: str, b: str) -> str:
     """|A∩B| of two ``nb``-word bitsets as unrolled AND+popcount: flat
     codegen arithmetic, no per-pair lambda or array allocation. ``a``
     and ``b`` name an array<long> column, or carry a ``{w}`` field that
-    names flat per-word long columns (``"m{w}_a"``)."""
+    names flat per-word long columns (``"m{w}_a"``). Returned as SQL
+    text for ``selectExpr``: built as Columns, the nb-word sum costs
+    several gateway round trips per word."""
 
-    def word(c: str, w: int) -> Column:
-        return F.col(c.format(w=w)) if "{w}" in c else F.col(c).getItem(w)
+    def word(c: str, w: int) -> str:
+        return c.format(w=w) if "{w}" in c else f"{c}[{w}]"
 
-    return _tree_sum(
-        [F.bit_count(word(a, w).bitwiseAND(word(b, w))) for w in range(nb)]
+    return _tree_sum_sql(
+        [f"bit_count({word(a, w)} & {word(b, w)})" for w in range(nb)]
     )
 
 
@@ -403,8 +413,6 @@ def _hot_band_buckets(
     relation — per artifact build on the resident-index path, per
     invocation on rebuild-per-call paths."""
     import math
-
-    from pim_orc_spark.session import default_parallelism
 
     sizes = banded.groupBy("band", "key").agg(
         F.count(F.lit(1)).alias("n")
@@ -511,15 +519,19 @@ def _salted_band_candidates(
     what the exchange would have planned anyway (measured on the
     sf0.1 slot, identical output: 3.48 s → 2.86 s min-of-3).
     """
-    from pim_orc_spark.session import default_parallelism
-
     n_parts = default_parallelism(banded.sparkSession) * 2
     pair_filter = F.col("doc_a") < F.col("doc_b")
 
-    def side(alias: str, suffix: str):
-        cols = [F.col("doc_id").alias(alias), "band", "key"]
-        cols.extend(F.col(c).alias(f"{c}_{suffix}") for c in payload)
-        return cols
+    # SQL text, not Columns: a narrow-branch payload is up to
+    # CARRY_MASK_MAX_WORDS + 1 renames per side, and every Column call
+    # is its own gateway round trip.
+    def side(alias: str, suffix: str) -> list[str]:
+        return [
+            f"doc_id AS {alias}",
+            "band",
+            "key",
+            *(f"{c} AS {c}_{suffix}" for c in payload),
+        ]
 
     out_cols = ["doc_a", "doc_b"]
     out_cols += [f"{c}_a" for c in payload] + [f"{c}_b" for c in payload]
@@ -539,40 +551,33 @@ def _salted_band_candidates(
     # class hits janino's 64 KB fallback.
     if hot_empty:
         left = (
-            banded.select(*side("doc_a", "a"))
+            banded.selectExpr(*side("doc_a", "a"))
             .repartition(n_parts, "band", "key")
             .hint("shuffle_merge")
         )
-        right = banded.select(*side("doc_b", "b")).repartition(
+        right = banded.selectExpr(*side("doc_b", "b")).repartition(
             n_parts, "band", "key"
         )
         return (
             left.join(right, ["band", "key"])
             .filter(pair_filter)
-            .select(*out_cols)
+            .selectExpr(*out_cols)
         )
     tagged = banded.join(F.broadcast(hot_df), ["band", "key"], "left")
-    left = tagged.select(
+    left = tagged.selectExpr(
         *side("doc_a", "a"),
-        F.when(
-            F.col("is_hot"), F.pmod(F.xxhash64("doc_id"), F.lit(salt))
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("salt"),
+        "CAST(CASE WHEN is_hot THEN pmod(xxhash64(doc_id), "
+        f"{salt}) ELSE 0 END AS INT) AS salt",
     ).repartition(n_parts, "band", "key", "salt").hint("shuffle_merge")
-    right = tagged.select(
+    right = tagged.selectExpr(
         *side("doc_b", "b"),
-        F.explode(
-            F.when(
-                F.col("is_hot"), F.sequence(F.lit(0), F.lit(salt - 1))
-            ).otherwise(F.array(F.lit(0)))
-        ).alias("salt"),
+        f"explode(CASE WHEN is_hot THEN sequence(0, {salt - 1}) "
+        "ELSE array(0) END) AS salt",
     ).repartition(n_parts, "band", "key", "salt")
     return (
         left.join(right, ["band", "key", "salt"])
         .filter(pair_filter)
-        .select(*out_cols)
+        .selectExpr(*out_cols)
     )
 
 
@@ -710,19 +715,18 @@ def minhash_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     return _pairs_from_sigs(per_doc, nb)
 
 
-def _doc_signatures(
+def _signature_agg(
     spark: SparkSession, docs: DataFrame
 ) -> tuple[DataFrame | None, int]:
-    """Stage 1 of the LSH engine: shingle → fused signature+bitset
-    aggregate → the NARROW per-doc index row (band keys + mask + sz),
-    localCheckpoint'ed. Returns (per_doc, n_mask_words); (None, 0) for
-    an empty corpus."""
+    """Stage 1's fused signature+bitset aggregate, one row per doc:
+    doc_id, the MINHASH_K signature mins s0.., and either the nb bitset
+    words m0.. (narrow dictionary) or the index set gset (wide).
+    Returns (agg, n_mask_words); (None, 0) for an empty corpus."""
     # Shingling costs ~100× a scan per byte and TWO consumers explode
     # `g` (the dictionary distinct and the fused signature+encode pass)
     # — materialize it once. Executor-local storage linear in the
     # corpus, the standard trade for a multiply-consumed intermediate.
     g = _grams_of(spark, docs).localCheckpoint()
-    params = minhash_params(MINHASH_K)
     grams_dict, n_grams = _gram_dictionary(g)
     nb = (n_grams + 63) // 64
     if nb == 0:
@@ -747,26 +751,31 @@ def _doc_signatures(
         .join(F.broadcast(grams_dict), "gram")
         .select("doc_id", poly_hash("gram").alias("h"), "idx")
     )
+    # The aggregate is ONE SQL statement, not 128 + nb Column
+    # expressions: Column algebra pays gateway round trips per call
+    # (~60 per signature column), and building this aggregate that way
+    # cost seconds of driver time per plan. The literals keep the
+    # Column form's types (a, b and MOD are int literals under a bigint
+    # h), so the signatures are bit-identical.
     sig_cols = [
-        F.min((F.col("h") * a + b) % MOD).alias(f"s{i}")
-        for i, (a, b) in enumerate(params)
+        f"min((h * {a} + {b}) % {MOD}) AS s{i}"
+        for i, (a, b) in enumerate(minhash_params(MINHASH_K))
     ]
     if nb <= CARRY_MASK_MAX_WORDS:
         # NARROW dictionary — bitset words as bit_or aggregates, NOT
         # collect_set + a mask fold: collect_set is a
         # TypedImperativeAggregate, and one such column demotes the
-        # ENTIRE 128-min aggregate from whole-stage-codegen
-        # HashAggregateExec to ObjectHashAggregate (measured ~1.7×
-        # slower end-to-end). bit_or is declarative, so the fused agg
-        # keeps codegen. Duplicate grams per doc OR in the same bit —
-        # idempotent — and the set size falls out as Σ popcount(word).
+        # ENTIRE 128-min aggregate from HashAggregateExec to
+        # ObjectHashAggregate (measured ~1.7× slower end-to-end).
+        # bit_or is declarative, so the fused agg stays a
+        # HashAggregateExec; it is whole-stage-codegen'd because
+        # session.PARITY_RUNTIME_CONFS raises spark.sql.codegen.maxFields
+        # past its 1 + MINHASH_K + nb output fields. Duplicate grams per
+        # doc OR in the same bit — idempotent — and the set size falls
+        # out as Σ popcount(word).
         word_cols = [
-            F.bit_or(
-                F.expr(
-                    f"CASE WHEN idx DIV 64 = {w} "
-                    "THEN shiftleft(1L, idx % 64) ELSE 0L END"
-                )
-            ).alias(f"m{w}")
+            f"bit_or(CASE WHEN idx DIV 64 = {w} "
+            f"THEN shiftleft(1L, idx % 64) ELSE 0L END) AS m{w}"
             for w in range(nb)
         ]
     else:
@@ -787,9 +796,25 @@ def _doc_signatures(
         # mod 2³¹−1, and at a 47k dictionary a corpus-level collision
         # is likelier than not — dictionary indices are collision-free,
         # so the Jaccard stays exact (oracle-identical).
-        word_cols = [F.collect_set("idx").alias("gset")]
-    agg = ex.groupBy("doc_id").agg(*sig_cols, *word_cols)
+        word_cols = ["collect_set(idx) AS gset"]
+    agg = spark.sql(
+        f"SELECT doc_id, {', '.join(sig_cols + word_cols)} "
+        "FROM {ex} GROUP BY doc_id",
+        ex=ex,
+    )
+    return agg, nb
 
+
+def _doc_signatures(
+    spark: SparkSession, docs: DataFrame
+) -> tuple[DataFrame | None, int]:
+    """Stage 1 of the LSH engine: shingle → fused signature+bitset
+    aggregate (``_signature_agg``) → the NARROW per-doc index row (band
+    keys + mask + sz), localCheckpoint'ed. Returns (per_doc,
+    n_mask_words); (None, 0) for an empty corpus."""
+    agg, nb = _signature_agg(spark, docs)
+    if agg is None:
+        return None, 0
     # Band key = xxhash64 of the band's 4 signature values, not their
     # concatenated string: the self-join shuffles 8-byte longs instead
     # of ~40-char strings. A 64-bit band-key collision merely ADDS a
@@ -797,11 +822,9 @@ def _doc_signatures(
     # 5e-8 miss bound is untouched (collisions can only increase
     # recall, never lose a pair).
     r = MINHASH_K // LSH_BANDS
-    band_keys = F.array(
-        *[
-            F.xxhash64(*[F.col(f"s{band * r + j}") for j in range(r)])
-            for band in range(LSH_BANDS)
-        ]
+    band_keys = ", ".join(
+        "xxhash64(" + ", ".join(f"s{band * r + j}" for j in range(r)) + ")"
+        for band in range(LSH_BANDS)
     )
     # localCheckpoint: the salting join consumes the banded rows THREE
     # times (bucket-size count, left probe, right build), and each
@@ -817,23 +840,15 @@ def _doc_signatures(
     # banding admits ~all pairs and verification dominates — the bitset
     # keeps per-pair cost at a few dozen instructions either way.
     if nb <= CARRY_MASK_MAX_WORDS:
-        sz_expr = _tree_sum(
-            [F.bit_count(F.col(f"m{w}")) for w in range(nb)]
-        )
-        per_doc = agg.select(
-            "doc_id",
-            band_keys.alias("keys"),
-            F.array(*[F.col(f"m{w}") for w in range(nb)]).alias("mask"),
-            sz_expr.alias("sz"),
-        ).localCheckpoint()
+        words = [f"m{w}" for w in range(nb)]
+        verify = [
+            f"array({', '.join(words)}) AS mask",
+            _tree_sum_sql([f"bit_count({m})" for m in words]) + " AS sz",
+        ]
     else:
-        per_doc = agg.select(
-            "doc_id",
-            band_keys.alias("keys"),
-            "gset",
-            F.size("gset").alias("sz"),
-        ).localCheckpoint()
-    return per_doc, nb
+        verify = ["gset", "size(gset) AS sz"]
+    per_doc = agg.selectExpr("doc_id", f"array({band_keys}) AS keys", *verify)
+    return per_doc.localCheckpoint(), nb
 
 
 def _pairs_from_sigs(
@@ -869,14 +884,11 @@ def _pairs_from_sigs(
         # colliding in k bands pays k gate evaluations (~4 on this
         # corpus) of ~3 instructions per mask word.
         mask_cols = tuple(f"m{w}" for w in range(nb))
-        banded = per_doc.select(
+        banded = per_doc.selectExpr(
             "doc_id",
-            *[
-                F.col("mask").getItem(w).alias(c)
-                for w, c in enumerate(mask_cols)
-            ],
+            *[f"mask[{w}] AS {c}" for w, c in enumerate(mask_cols)],
             "sz",
-            F.posexplode("keys").alias("band", "key"),
+            "posexplode(keys) AS (band, key)",
         )
         cands = _salted_band_candidates(
             banded,
@@ -887,12 +899,12 @@ def _pairs_from_sigs(
         # extra conjunct in this join condition costs per candidate,
         # and the tiny-dictionary corpora that reach this branch have
         # concentrated doc sizes the gate cannot prune.
-        pairs = cands.select(
+        pairs = cands.selectExpr(
             "doc_a",
             "doc_b",
-            _inter(nb, "m{w}_a", "m{w}_b").alias("n_common"),
-            F.col("sz_a").alias("sza"),
-            F.col("sz_b").alias("szb"),
+            f"{_inter(nb, 'm{w}_a', 'm{w}_b')} AS n_common",
+            "sz_a AS sza",
+            "sz_b AS szb",
         )
         return _verified(pairs, "jaccard", distinct=True)
     # Wide-dictionary path: banded rows stay skinny and the exact
@@ -1014,8 +1026,8 @@ def bitset_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
         & _size_gate("sza", "szb", JACCARD_T, symmetric=True)
     )
     return _verified(
-        pairs.select(
-            "doc_a", "doc_b", _inter(nb, "ma", "mb").alias("n_common"), "sza", "szb"
+        pairs.selectExpr(
+            "doc_a", "doc_b", f"{_inter(nb, 'ma', 'mb')} AS n_common", "sza", "szb"
         ),
         "jaccard",
     )
@@ -1062,8 +1074,8 @@ def containment_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
         & _size_gate("sza", "szb", CONTAIN_T, symmetric=False)
     )
     return _verified(
-        pairs.select(
-            "doc_inner", "doc_outer", _inter(nb, "ma", "mb").alias("n_common"), "sza"
+        pairs.selectExpr(
+            "doc_inner", "doc_outer", f"{_inter(nb, 'ma', 'mb')} AS n_common", "sza"
         ),
         "containment",
     )
@@ -1307,8 +1319,6 @@ def _prefix_pairs_from_artifact(
         # pair-enumeration parallelism (the band-join precedent — AQE
         # sizes partitions from the small explode bytes, not the join
         # output).
-        from pim_orc_spark.session import default_parallelism
-
         fr = _gate_fraction(CONTAIN_T)
         num, den = fr.numerator, fr.denominator
         n_parts = default_parallelism(enc.sparkSession) * 2
@@ -1386,10 +1396,10 @@ def _prefix_pairs_from_artifact(
                 f" AND {num} * sza <= {den} * (szb - j0)"
             )
             .join(mask_b, "doc_b")
-            .select(
+            .selectExpr(
                 "doc_inner",
-                F.col("doc_b").alias("doc_outer"),
-                _inter(nb, "ma", "mb").alias("n_common"),
+                "doc_b AS doc_outer",
+                f"{_inter(nb, 'ma', 'mb')} AS n_common",
                 "sza",
             )
         )
@@ -1411,10 +1421,10 @@ def _prefix_pairs_from_artifact(
             ),
             "doc_b",
         )
-        .select(
+        .selectExpr(
             "doc_inner",
-            F.col("doc_b").alias("doc_outer"),
-            _inter(nb, "ma", "mb").alias("n_common"),
+            "doc_b AS doc_outer",
+            f"{_inter(nb, 'ma', 'mb')} AS n_common",
             "sza",
         )
     )
@@ -1633,7 +1643,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet is one split; after the later repartition it's too late)
     e = spread(spark, load_table(spark, sf_dir, "embeddings"))
     v = e.select("vec_id", as_double_vec("embedding", EMB_DIM).alias("v")).select(
-        "vec_id", unit_vec(F.col("v"), EMB_DIM).alias("u")
+        "vec_id", unit_vec("v", EMB_DIM).alias("u")
     )
     # Repartition the probe side: the fixture parquet is one split, and
     # a 1×1-partition cartesian runs its O(n²) loop on a single core
@@ -1643,7 +1653,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_a"), F.col("u").alias("ua")
     )
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("u").alias("ub"))
-    cos = dot_unrolled(F.col("ua"), F.col("ub"), EMB_DIM)
+    cos = F.expr(dot_unrolled_sql("ua", "ub", EMB_DIM))
     return (
         a.crossJoin(F.broadcast(b))
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1669,7 +1679,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         e.select("vec_id", as_double_vec("embedding", EMB_DIM).alias("v0"))
         .withColumn("bucket", _bucket_col(F.col("v0"), planes))
-        .select("vec_id", unit_vec(F.col("v0"), EMB_DIM).alias("u"), "bucket")
+        .select("vec_id", unit_vec("v0", EMB_DIM).alias("u"), "bucket")
     )
     a = v.select(
         F.col("vec_id").alias("vec_a"), F.col("u").alias("ua"), "bucket"
@@ -1677,7 +1687,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = v.select(
         F.col("vec_id").alias("vec_b"), F.col("u").alias("ub"), "bucket"
     )
-    cos = dot_unrolled(F.col("ua"), F.col("ub"), EMB_DIM)
+    cos = F.expr(dot_unrolled_sql("ua", "ub", EMB_DIM))
     return (
         a.join(b, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))

@@ -25,7 +25,6 @@ from pim_orc_spark.catalog import load_table
 from pim_orc_spark.functions.vector import (
     as_double_vec,
     cosine_sql,
-    dot_unrolled,
     dot_unrolled_sql,
     unit_vec,
 )
@@ -56,7 +55,7 @@ def _unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows_per_part=VEC_ROWS_PER_PART,
     )
     return e.select("vec_id", as_double_vec("embedding", DIM).alias("v0")).select(
-        "vec_id", unit_vec(F.col("v0"), DIM).alias("v")
+        "vec_id", unit_vec("v0", DIM).alias("v")
     )
 
 TOP_K = 10
@@ -105,7 +104,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    sim = dot_unrolled(F.col("qv"), F.col("v"), DIM)
+    sim = F.expr(dot_unrolled_sql("qv", "v", DIM))
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("vec_id").asc()
     )
@@ -134,14 +133,14 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         e.select("vec_id", as_double_vec("embedding", DIM).alias("v0"))
         .withColumn("bucket", _bucket_col(F.col("v0"), planes))
-        .select("vec_id", unit_vec(F.col("v0"), DIM).alias("v"), "bucket")
+        .select("vec_id", unit_vec("v0", DIM).alias("v"), "bucket")
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("bucket"),
     )
-    sim = dot_unrolled(F.col("qv"), F.col("v"), DIM)
+    sim = F.expr(dot_unrolled_sql("qv", "v", DIM))
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("vec_id").asc()
     )
@@ -735,7 +734,7 @@ def ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
         )
     )
-    sim = dot_unrolled(F.col("qv"), F.col("v"), DIM)
+    sim = F.expr(dot_unrolled_sql("qv", "v", DIM))
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("vec_id").asc()
     )
@@ -1350,7 +1349,7 @@ def derived_sem_tau(
         "cid",
     )
     cos = F.round(
-        dot_unrolled(F.col("v"), F.col("vb"), DIM)
+        F.expr(dot_unrolled_sql("v", "vb", DIM))
         / (F.col("nrm") * F.col("nrm_b")),
         6,
     )
@@ -1417,7 +1416,7 @@ def _semantic_pairs_from(
         "cid",
     ]
     cos = F.round(
-        dot_unrolled(F.col("v"), F.col("vb"), DIM)
+        F.expr(dot_unrolled_sql("v", "vb", DIM))
         / (F.col("nrm") * F.col("nrm_b")),
         6,
     )
@@ -1507,7 +1506,7 @@ def dedup_semantic_pairs(
         "vec_id",
         "v",
         "cid",
-        F.sqrt(dot_unrolled(F.col("v"), F.col("v"), DIM)).alias("nrm"),
+        F.sqrt(F.expr(dot_unrolled_sql("v", "v", DIM))).alias("nrm"),
     )
     if hot_threshold is not None:
         # caller-derived threshold (e.g. derived_hot_threshold):

@@ -58,6 +58,14 @@ PARITY_RUNTIME_CONFS: dict[str, str] = {
     # Arrow for all pandas_udf / applyInPandas / mapInArrow paths.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Whole-stage codegen is skipped for any operator whose output has
+    # more fields than this (default 100). The MinHash engine's fused
+    # signature aggregate outputs 1 + MINHASH_K + nb fields: on its
+    # narrow branch that is up to 1 + 128 + CARRY_MASK_MAX_WORDS (64)
+    # = 193, so at the default both its partial and final
+    # HashAggregates ran interpreted (measured 2× slower on 2.92M gram
+    # rows). 256 covers the widest narrow-branch plan.
+    "spark.sql.codegen.maxFields": "256",
     # Local fixtures are small; stop broadcast-join misfires from tiny
     # stats is NOT a concern — keep default 10MB threshold.
 }

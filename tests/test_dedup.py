@@ -692,6 +692,124 @@ def test_lsh_candidate_reduction_and_pair_parity(spark, monkeypatch):
     assert len(lsh) >= 10  # the planted near-dups were actually found
 
 
+def _corpus_of_width(spark, n_words: int, seed: int = 5):
+    """Seeded (doc_id, text) corpus whose char-3-gram dictionary is
+    exactly ``n_words`` 64-bit mask words wide, and its planted
+    near-duplicate pairs (exact Jaccard ≥ 0.8 by ``_py_grams``). Random
+    words over 18 letters; every 8th doc is a copy of the one before
+    with one of its 30 tokens replaced. A candidate doc that would widen
+    the dictionary past ``n_words`` is shortened or redrawn."""
+    import random
+    from fractions import Fraction
+
+    rng = random.Random(seed)
+
+    def word():
+        return "".join(
+            rng.choice("abcdefghijklmnopqr") for _ in range(rng.randint(3, 7))
+        )
+
+    def width(grams):
+        return (len(grams) + 63) // 64
+
+    rows, grams, k = [], set(), 30
+    while width(grams) < n_words:
+        if len(rows) % 8 == 7:
+            toks = rows[-1][1].split()
+            toks[rng.randrange(len(toks))] = word()
+        else:
+            toks = [word() for _ in range(k)]
+        text = " ".join(toks)
+        wider = grams | _py_grams(text)
+        if width(wider) > n_words:
+            k = max(1, k // 2)
+            continue
+        rows.append((len(rows), text))
+        grams = wider
+    sets = [_py_grams(t) for _, t in rows]
+    planted = {
+        (a, b)
+        for a in range(len(rows))
+        for b in range(a + 1, len(rows))
+        if Fraction(len(sets[a] & sets[b]), len(sets[a] | sets[b]))
+        >= Fraction(4, 5)
+    }
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return docs.localCheckpoint(), planted
+
+
+def test_minhash_plan_construction_round_trips(spark, monkeypatch):
+    """Building the MinHash pair engine's plan must stay cheap on the
+    driver: every Column-API call is its own Py4J gateway round trip,
+    and the engine's wide generated expressions (128 signature mins, a
+    bit_or per mask word, 32 band keys, the per-word payload renames and
+    the AND+popcount sum) built as Columns cost 25k-28k round trips
+    per plan at 44-64 mask words; built as SQL text, under 2k. Counted by
+    wrapping the gateway connection's send_command over plan
+    construction (which includes its eager dictionary, checkpoint and
+    hot-bucket jobs) at the widest narrow-branch dictionary."""
+    from py4j.clientserver import ClientServerConnection
+
+    docs, planted = _corpus_of_width(spark, dedup.CARRY_MASK_MAX_WORDS)
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    pairs = dedup.minhash_pairs(spark, docs)
+    monkeypatch.undo()
+    assert calls[0] <= 6000, f"{calls[0]} gateway round trips"
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == planted
+    assert len(planted) >= 3
+
+
+def test_minhash_fused_aggregate_and_band_join_stay_in_codegen(spark):
+    """The fused signature aggregate outputs 1 + MINHASH_K + nb fields
+    (193 at nb = CARRY_MASK_MAX_WORDS). Past spark.sql.codegen.maxFields
+    Spark silently skips whole-stage codegen for it, so the session must
+    cover that width, and both its partial and final HashAggregates must
+    sit under WholeStageCodegen. With codegen fallback off, a generated
+    class over janino's 64 KB limit raises instead of silently running
+    interpreted — for the aggregate and for the band join (2 × 65
+    payload fields, so also past the default limit) whose condition
+    unrolls the 64-word AND+popcount."""
+    width = 1 + dedup.MINHASH_K + dedup.CARRY_MASK_MAX_WORDS
+    assert width <= int(spark.conf.get("spark.sql.codegen.maxFields"))
+    docs, planted = _corpus_of_width(spark, dedup.CARRY_MASK_MAX_WORDS)
+    fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        agg, nb = dedup._signature_agg(spark, docs)
+        assert nb == dedup.CARRY_MASK_MAX_WORDS
+        assert len(agg.columns) == width
+        agg.collect()
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        aggs = [
+            line.lstrip(" :+-")
+            for line in final.splitlines()
+            if "HashAggregate(" in line and "min(" in line
+        ]
+        assert len(aggs) == 2, final
+        assert all(line.startswith("*(") for line in aggs), final
+        per_doc, nb = dedup._doc_signatures(spark, docs)
+        pairs = dedup._pairs_from_sigs(per_doc, nb)
+        assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == planted
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        joins = [
+            line.lstrip(" :+-")
+            for line in final.splitlines()
+            if "SortMergeJoin" in line
+        ]
+        assert joins and all(j.startswith("*(") for j in joins), final
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", fallback)
+
+
 @pytest.mark.perf
 def test_lsh_beats_all_pairs_on_realistic_corpus(spark):
     """The WALL-CLOCK half of the scale claim: LSH must finish faster

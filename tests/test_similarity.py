@@ -154,7 +154,7 @@ def test_semantic_pairs_invariant_under_salt(spark):
     from pim_orc_spark.operators.similarity import (
         DIM,
         _semantic_pairs_from,
-        dot_unrolled,
+        dot_unrolled_sql,
     )
 
     rng = np.random.default_rng(7)
@@ -166,7 +166,7 @@ def test_semantic_pairs_invariant_under_salt(spark):
         rows.append((i, [float(x) for x in v], cid))  # cosines ≫ SEM_TAU
     base = spark.createDataFrame(rows, "vec_id: long, v: array<double>, cid: int")
     nv = base.withColumn(
-        "nrm", F.sqrt(dot_unrolled(F.col("v"), F.col("v"), DIM))
+        "nrm", F.sqrt(F.expr(dot_unrolled_sql("v", "v", DIM)))
     ).localCheckpoint()
 
     def pairs(salt, hot_threshold):
@@ -227,7 +227,7 @@ def test_kmeans_at_non_default_k_matches_sequential_reference(spark):
         for i, v in zip(tbl["vec_id"], tbl["embedding"])
     }
 
-    def dot(a, b):  # the dot_unrolled left fold, term for term
+    def dot(a, b):  # the dot_unrolled_sql left fold, term for term
         acc = a[0] * b[0]
         for i in range(1, similarity.DIM):
             acc += a[i] * b[i]
@@ -308,7 +308,7 @@ def test_derived_threshold_and_tau_agree_with_pins(spark, sf_dir):
         dedup_semantic_pairs,
         derived_hot_threshold,
         derived_sem_tau,
-        dot_unrolled,
+        dot_unrolled_sql,
     )
 
     assigned, _, _ = _km_state(spark, sf_dir)
@@ -334,7 +334,7 @@ def test_derived_threshold_and_tau_agree_with_pins(spark, sf_dir):
         "vec_id",
         "v",
         "cid",
-        F.sqrt(dot_unrolled(F.col("v"), F.col("v"), DIM)).alias("nrm"),
+        F.sqrt(F.expr(dot_unrolled_sql("v", "v", DIM))).alias("nrm"),
     )
     tau_hi = derived_sem_tau(nv, quantile=0.99)
     tau_lo = derived_sem_tau(nv, quantile=0.5)
@@ -359,7 +359,7 @@ def _synthetic_tight_nv(spark):
     import numpy as np
     import pandas as pd
 
-    from pim_orc_spark.operators.similarity import DIM, dot_unrolled
+    from pim_orc_spark.operators.similarity import DIM, dot_unrolled_sql
 
     rng = np.random.default_rng(7)
     k, n = 8, 400
@@ -380,7 +380,7 @@ def _synthetic_tight_nv(spark):
         "vec_id",
         "v",
         "cid",
-        F.sqrt(dot_unrolled(F.col("v"), F.col("v"), DIM)).alias("nrm"),
+        F.sqrt(F.expr(dot_unrolled_sql("v", "v", DIM))).alias("nrm"),
     )
 
 
@@ -406,7 +406,7 @@ def test_derived_tau_is_pure_postfilter_on_both_corpora(
         _semantic_pairs_from,
         derived_hot_threshold,
         derived_sem_tau,
-        dot_unrolled,
+        dot_unrolled_sql,
     )
 
     if corpus == "fixture":
@@ -415,7 +415,7 @@ def test_derived_tau_is_pure_postfilter_on_both_corpora(
             "vec_id",
             "v",
             "cid",
-            F.sqrt(dot_unrolled(F.col("v"), F.col("v"), DIM)).alias(
+            F.sqrt(F.expr(dot_unrolled_sql("v", "v", DIM))).alias(
                 "nrm"
             ),
         )
@@ -455,7 +455,7 @@ def test_derived_sem_tau_raises_on_empty_candidates(spark, sf_dir):
         DIM,
         _km_state,
         derived_sem_tau,
-        dot_unrolled,
+        dot_unrolled_sql,
     )
 
     assigned, _, _ = _km_state(spark, sf_dir)
@@ -463,7 +463,7 @@ def test_derived_sem_tau_raises_on_empty_candidates(spark, sf_dir):
         "vec_id",
         "v",
         "cid",
-        F.sqrt(dot_unrolled(F.col("v"), F.col("v"), DIM)).alias("nrm"),
+        F.sqrt(F.expr(dot_unrolled_sql("v", "v", DIM))).alias("nrm"),
     )
     with _pytest.raises(ValueError, match="empty within-cluster"):
         derived_sem_tau(nv, per_cluster_cap=1)
