@@ -296,10 +296,7 @@ def q15_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("l_orderkey").alias("n_orders"),
         F.countDistinct("l_partkey").alias("n_parts"),
         exact_sum(
-            F.when(F.col("l_returnflag") == "R", F.col("l_extendedprice")).otherwise(
-                F.lit(0.0)
-            ),
-            "returned_revenue",
+            "IF(l_returnflag = 'R', l_extendedprice, 0.0D)", "returned_revenue"
         ),
     )
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from pim_orc_spark.catalog import load_table
 from pim_orc_spark.fsutil import versioned_cache_dir
-from pim_orc_spark.functions.numeric import exact_sum, exact_sum_sql
+from pim_orc_spark.functions.numeric import cents, exact_sum, exact_sum_sql
 from pim_orc_spark.session import ensure_parity_confs
 
 # Write-path parity knobs (see module docstring for reference citations).
@@ -258,9 +258,7 @@ def evolved_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         v2 = li.filter(F.col("l_orderkey") % 2 == 0).select(
             "l_orderkey",
             "l_extendedprice",
-            F.round(F.col("l_discount") * 100)
-            .cast("long")
-            .alias("l_disc_cents"),
+            cents("l_discount").alias("l_disc_cents"),
         )
         v1.write.mode("overwrite").parquet(tmp)
         v2.write.mode("append").parquet(tmp)

@@ -958,3 +958,58 @@ def test_spread_rows_per_part_caps_fanout_by_input_rows(spark, sf_dir):
     # non-file plans fall back to plain spread behavior (no crash)
     mem = spark.range(0, 100).coalesce(1)
     assert spread(spark, mem, rows_per_part=10).rdd.getNumPartitions() == par
+
+
+def _cents_queries():
+    from pim_orc_spark.operators.relational import (
+        q01_flagship_sum,
+        q04_pricing_summary,
+        q08_fact_join_agg,
+    )
+    from pim_orc_spark.sources.orc_io import orc_roundtrip_sum
+
+    return {
+        "q01_flagship_sum": q01_flagship_sum,
+        "orc_roundtrip_sum": orc_roundtrip_sum,
+        "q04_pricing_summary": q04_pricing_summary,
+        "q08_fact_join_agg": q08_fact_join_agg,
+    }
+
+
+def test_exact_sums_aggregate_without_round(spark, sf_dir):
+    """numeric.cents feeds every exact sum: the reference's own SUM
+    (q01, orc_roundtrip_sum), q04's grouped sums and avg and q08's
+    split revenue accumulator. Spark's ``round`` on a double builds a
+    BigDecimal per row, so no aggregate of their executed plans may
+    contain ``round(``."""
+    for name, fn in _cents_queries().items():
+        df = fn(spark, sf_dir)
+        df.collect()  # the final adaptive plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        aggs = [line for line in plan.splitlines() if "Aggregate" in line]
+        assert aggs, name
+        assert [line for line in aggs if "round(" in line] == [], name
+
+
+def test_exact_sum_plan_construction_round_trips(spark, sf_dir, monkeypatch):
+    """The exact aggregates are built as SQL text: one F.expr per
+    aggregate instead of a Column call per operator, each of which is a
+    Py4J round trip. Counted over a warm plan construction; Column
+    algebra cost 123 (q01) and 351 (q08)."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    queries = _cents_queries()
+    for name, ceiling in (("q01_flagship_sum", 60), ("q08_fact_join_agg", 180)):
+        queries[name](spark, sf_dir)
+        calls[0] = 0
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        queries[name](spark, sf_dir)
+        monkeypatch.undo()
+        assert calls[0] <= ceiling, f"{name}: {calls[0]} gateway round trips"

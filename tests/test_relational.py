@@ -372,3 +372,118 @@ def test_q91_exact_percentiles_survive_heavy_ties_end_to_end(
         assert r["p99_exact_cents"] == int(vals[k99 - 1]), g
         assert r["p50_within_eps"] and r["p99_within_eps"], g
         assert r["rollup_within_eps"], g
+
+
+def _cents_mismatches(df, col, ours):
+    """Rows of ``df`` where ``ours`` (a Column over ``col``) and Spark's
+    own ``CAST(round(...) AS BIGINT)`` disagree (null-safe), and the
+    rows where HALF_UP differs from rint's ties-to-even."""
+    from pyspark.sql import functions as F
+
+    y = f"{col}" if col == "y" else f"{col} * 100"
+    got = df.select(
+        ours.alias("c"),
+        F.expr(f"CAST(round({y}) AS BIGINT)").alias("r"),
+        F.expr(f"CAST(rint({y}) AS BIGINT)").alias("e"),
+    )
+    wrong = got.where(~F.col("c").eqNullSafe(F.col("r"))).count()
+    return wrong, got.where(F.col("r") != F.col("e")).count()
+
+
+def test_cents_matches_spark_round(spark):
+    """``cents`` replaces ``CAST(round(x * 100) AS BIGINT)`` — a
+    BigDecimal per row — with rint/abs/signum double arithmetic
+    (numeric._half_up_text). It must equal Spark's own round on every
+    double, not only 2-dp ones: every cent value over ±10⁷ cents, every
+    half-cent over ±10⁶ (products that land next to a tie), a seeded
+    random sweep of non-2-dp values up to 1e16, exact ties at the
+    bottom and top of the < 2⁵² range, and the edges. On NaN, ±inf
+    and |y| > 2⁶³ both forms raise CAST_OVERFLOW."""
+    from pyspark.sql import functions as F
+
+    from pim_orc_spark.functions.numeric import _half_up_text, cents
+
+    grids = {
+        "cents": spark.range(-(10**7), 10**7 + 1).selectExpr("id / 100 AS x"),
+        "half_cents": spark.range(-(10**6), 10**6).selectExpr(
+            "(id + 0.5D) / 100 AS x"
+        ),
+        "random": spark.range(400_000).selectExpr(
+            "(rand(11) - 0.5D) * pow(10D, floor(rand(12) * 17)) AS x"
+        ),
+    }
+    for name, df in grids.items():
+        wrong, ties = _cents_mismatches(df, "x", cents("x"))
+        assert wrong == 0, name
+        assert name != "half_cents" or ties > 0  # the tie branch is hit
+    top = 2.0**52
+    tie_ys = spark.createDataFrame(
+        [(s * (top - 0.5 - k),) for k in range(2000) for s in (1, -1)], "y double"
+    ).unionByName(spark.range(-(10**5), 10**5).selectExpr("id + 0.5D AS y"))
+    wrong, ties = _cents_mismatches(tie_ys, "y", F.expr(_half_up_text("y")))
+    assert wrong == 0 and ties > 0
+
+    edges = [None, 0.0, -0.0, 0.5, -0.5, 1.5, -1.5, 2.5, -2.5,
+             0.49999999999999994, -0.49999999999999994,
+             top - 0.5, -(top - 0.5), top + 1, 2.0**53 + 1, 9.2e16, -9.2e16]
+    for col in ("x", "y"):
+        # y = 2⁶³ itself saturates to Long.MaxValue in both forms
+        vals = edges + ([2.0**63, -(2.0**63)] if col == "y" else [])
+        df = spark.createDataFrame([(v,) for v in vals], f"{col} double")
+        ours = cents("x") if col == "x" else F.expr(_half_up_text("y"))
+        assert _cents_mismatches(df, col, ours)[0] == 0, col
+    # the naive floor(|y| + 0.5) form is wrong here; round says 0
+    half = spark.createDataFrame([(0.49999999999999994,)], "y double")
+    assert half.selectExpr(
+        "CAST(round(y) AS BIGINT)",
+        "CAST(signum(y) * floor(abs(y) + 0.5D) AS BIGINT)",
+        _half_up_text("y"),
+    ).first() == (0, 1, 0)
+
+    overflow = [float("nan"), float("inf"), float("-inf"), 1e19, -1e19, 2.0**64]
+    for v in overflow:
+        df = spark.createDataFrame([(v, v / 100)], "y double, x double")
+        for ours in (F.expr(_half_up_text("y")), cents("x")):
+            with pytest.raises(Exception, match="CAST_OVERFLOW"):
+                df.select(ours).collect()
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            df.selectExpr("CAST(round(y) AS BIGINT)").collect()
+
+
+def test_no_inline_cents_outside_numeric():
+    """``numeric.cents`` is the one Spark-side cents conversion: outside
+    numeric.py no Column ``F.round(<expr> * 100)`` (to 0 places) may
+    remain, since Spark's round pays a BigDecimal per row. SQL strings
+    (the DuckDB ORACLES and the shared-text queries) are not scanned."""
+    import ast
+    import pathlib
+
+    import pim_orc_spark
+
+    def hundred(n):
+        return isinstance(n, ast.Constant) and n.value in (100, 100.0)
+
+    found = []
+    root = pathlib.Path(pim_orc_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "numeric.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "round"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+                and node.args
+            ):
+                continue
+            arg, scale = node.args[0], node.args[1:] + [k.value for k in node.keywords]
+            if (
+                isinstance(arg, ast.BinOp)
+                and isinstance(arg.op, ast.Mult)
+                and (hundred(arg.left) or hundred(arg.right))
+                and all(isinstance(s, ast.Constant) and s.value == 0 for s in scale)
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert found == []

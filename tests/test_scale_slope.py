@@ -206,23 +206,23 @@ def _build_sf1(spark, sf_dir: str, out: str) -> None:
     _synth_docs(spark, REPS * DOCS_SMALL, out)
 
 
-def _persist_slope(update: dict) -> None:
-    """Merge one test's evidence block into the round's SLOPE artifact
-    (two perf tests — LSH/top-slots and containment — share the file;
-    a wholesale write from either would drop the other's block)."""
+@pytest.fixture(scope="module")
+def slope_json(tmp_path_factory):
+    """Where this run's slope evidence goes: a file under pytest's temp
+    dir, so a perf run never rewrites the repo's tracked records."""
+    return tmp_path_factory.mktemp("slope") / "SLOPE.json"
+
+
+def _persist_slope(path, update: dict) -> None:
+    """Merge one test's evidence block into the run's SLOPE file (the
+    perf tests share it; a wholesale write from one would drop the
+    others' blocks)."""
     import json
 
-    rnd = os.environ.get("SPARK_GRAFT_ROUND", "16")
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo_root, f"SLOPE_r{rnd}.json")
-    data = {}
-    if os.path.exists(path):
-        with open(path) as fh:
-            data = json.load(fh)
-    data["round"] = f"r{rnd}"
+    data = json.loads(path.read_text()) if path.exists() else {}
     data.update(update)
-    with open(path, "w") as fh:
-        json.dump(data, fh, indent=1)
+    path.write_text(json.dumps(data, indent=1))
+    print(f"slope evidence: {path}")
 
 
 def _time_slots(
@@ -256,7 +256,7 @@ def _time_slots(
 
 
 @pytest.mark.perf
-def test_top_slots_scale_linearly_one_decade_up(spark, tmp_path):
+def test_top_slots_scale_linearly_one_decade_up(spark, tmp_path, slope_json):
     import __spark_entry__ as entry
 
     sf_dir = BASE_SF_DIR
@@ -360,9 +360,8 @@ def test_top_slots_scale_linearly_one_decade_up(spark, tmp_path):
         n: (r, bounds[n]) for n, r in ratios_norm.items() if r > bounds[n]
     }
 
-    # Persist the round's slope evidence (r12 verdict #1: the ratios
-    # were printed, not persisted — a widened bound needs a standing
-    # trail). SPARK_GRAFT_ROUND names the artifact; bump it per round.
+    # Persist the run's slope evidence (r12 verdict #1: the ratios
+    # were printed, not persisted — a widened bound needs a trail).
     artifact = {
         "base_sf_dir": sf_dir,
         "warm_ratios": ratios,
@@ -392,7 +391,7 @@ def test_top_slots_scale_linearly_one_decade_up(spark, tmp_path):
             ),
         },
     }
-    _persist_slope(artifact)
+    _persist_slope(slope_json, artifact)
 
     assert not offenders, (
         f"superlinear one-decade slope (cal-normalized ratio, bound): "
@@ -427,7 +426,7 @@ CONT_PASSES = int(os.environ.get("SPARK_GRAFT_SLOPE_PASSES", "3"))
 
 
 @pytest.mark.perf
-def test_containment_prefix_scales_one_decade_up(spark, tmp_path):
+def test_containment_prefix_scales_one_decade_up(spark, tmp_path, slope_json):
     from pim_orc_spark.operators.dedup import (
         _containment_prefix_candidates,
         containment_pairs_prefix_words,
@@ -505,6 +504,7 @@ def test_containment_prefix_scales_one_decade_up(spark, tmp_path):
     )
 
     _persist_slope(
+        slope_json,
         {
             "containment": {
                 "engine": "containment_pairs_prefix_words",
@@ -618,7 +618,7 @@ def _synth_vecs(spark, n_vecs: int, out: str) -> None:
 
 
 @pytest.mark.perf
-def test_ivf_scan_scales_one_decade_up(spark, tmp_path):
+def test_ivf_scan_scales_one_decade_up(spark, tmp_path, slope_json):
     from bench import calibration
     from pim_orc_spark.operators.similarity import (
         IVF_MAX_CENTROIDS,
@@ -700,6 +700,7 @@ def test_ivf_scan_scales_one_decade_up(spark, tmp_path):
     )
 
     _persist_slope(
+        slope_json,
         {
             "ivf": {
                 "engine": "ann_ivf_topk",
@@ -782,7 +783,7 @@ PHASH_PASSES = int(os.environ.get("SPARK_GRAFT_SLOPE_PASSES", "3"))
 
 
 @pytest.mark.perf
-def test_phash_hamming_scales_one_decade_up(spark):
+def test_phash_hamming_scales_one_decade_up(spark, slope_json):
     from bench import calibration
     from pim_orc_spark.operators.multimodal import (
         PHASH_DUP_EVERY,
@@ -854,6 +855,7 @@ def test_phash_hamming_scales_one_decade_up(spark):
     )
 
     _persist_slope(
+        slope_json,
         {
             "phash": {
                 "engine": "phash_pairs_from_ids",
