@@ -285,7 +285,6 @@ PYTEST_ONLY = {
     "stream_grouped_totals",  # stream_session_windows state machinery
     "q20_cube",  # q26/q27 grouping sets
     "q12_window_latest_order",  # ann_* ranking windows
-    "ann_cosine_topk",  # oracle identical to vectorized variant
     "dedup_ngram_jaccard",  # oracle identical to dedup_minhash_lsh
     "dedup_bitset_jaccard",  # oracle identical to dedup_minhash_lsh
     "dedup_embedding_cosine",  # ann_* cosine kernels

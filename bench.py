@@ -57,9 +57,9 @@ HEADLINE = [
     # pytest-covered baseline (round-2 verdict: don't headline a
     # deliberately quadratic stage)
     "dedup_minhash_lsh",
-    # vectorized variant is the scale plan (partial top-k per Arrow
-    # batch, shuffle O(parts×q×k)); the window-ranked exact form stays
-    # as its oracle baseline in queries()
+    # the exact top-k: the shared partial top-k kernel (top-k per
+    # Arrow batch, shuffle O(parts×q×k)) that every scan-shaped ANN
+    # operator runs with its own scorer
     "ann_cosine_topk_vectorized",
     "ann_ivf_topk",
     "text_quality",

@@ -32,12 +32,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any realistic scale factor
-# (region/nation are fixed-cardinality; supplier/part/customer grow with
-# SF but stay orders of magnitude under the fact tables).
-BROADCAST_DIMS = ("region", "nation")
-
-
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to TIMESTAMP (session tz, pinned UTC) no
     matter how the fixture stored it. Shared by the batch loader and the
@@ -78,13 +72,16 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 # shared-plan cache broke cogroup's two nation-ranked sides with an
 # ambiguous-self-join analysis error). This is what a production
 # catalog does: schema resolved once at registration, not per query.
-# The table_version key invalidates on fixture regeneration.
+# The table_version key invalidates on fixture regeneration. The batch
+# catalog and the stream source (a stream must declare its schema up
+# front) share it through ``parquet_schema``.
 _SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_parity_confs(spark)
-    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+def parquet_schema(spark: SparkSession, path: str):
+    """The footer schema of the parquet table at ``path``, read once
+    per file generation."""
+    path = os.path.abspath(path)
     # table_version stats a directory table's part files too: an
     # in-place part-file rewrite moves only the file's mtime, and a
     # stale schema served to read.schema() would surface as nulls or
@@ -98,17 +95,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for k in [k for k in _SCHEMA_CACHE if k[0] == path and k != key]:
             del _SCHEMA_CACHE[k]
         _SCHEMA_CACHE[key] = schema
-    df = spark.read.schema(schema).parquet(path)
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    ensure_parity_confs(spark)
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Load the named fixture tables as DataFrames keyed by table name."""
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def register_views(

@@ -126,16 +126,6 @@ def fmix32_py(h: int) -> int:
     return h ^ (h >> 16)
 
 
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One universal-hash permutation h_i(x) = (a*x + b) mod p over a
-    poly_hash value; a,b are per-permutation constants."""
-    return (h * a + b) % MOD
-
-
-def minhash_perm_sql(expr: str, a: int, b: int) -> str:
-    return f"(({expr}) * {a} + {b}) % {MOD}"
-
-
 def minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for k permutations — a simple LCG so
     both engines (and any future round) regenerate the same family."""

@@ -46,30 +46,15 @@ def as_double_vec(col: Column | str, expected_dim: int | None = None) -> Column:
     )
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def dot_unrolled_sql(a: str, b: str, dim: int) -> str:
     """Dot product unrolled over a known dimension, as ONE Spark-SQL
     expression string over column NAMES: ``dim`` multiply-adds of flat
-    codegen arithmetic. The HOF form (``dot``) interprets ~3 expression
-    nodes per element per evaluation; unrolled, a 12M-pair cosine join
-    at dim=64 drops from interpreted lambda stepping to straight-line
-    arithmetic. Built with Column algebra instead, the same expression
-    costs ~3·dim gateway round trips PER DOT (~0.6 s at dim=64 —
+    codegen arithmetic. A higher-order ``aggregate(zip_with(...))``
+    fold interprets ~3 expression nodes per element per evaluation;
+    unrolled, a 12M-pair cosine join at dim=64 drops from interpreted
+    lambda stepping to straight-line arithmetic. Built with Column
+    algebra instead, the same expression costs ~3·dim gateway round
+    trips PER DOT (~0.6 s at dim=64 —
     measured dominating iterative plans that construct many dots, e.g.
     k-means' three-dot distance built three times per run); parsing one
     string is a single call. Adds are left-associated, so the sum order

@@ -1672,13 +1672,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     missed); the oracle models the identical buckets, so the output is
     deterministic and hash-comparable. Skewed buckets at scale are
     split by AQE skew handling (or more planes: 16–20 at 100 TB)."""
-    from pim_orc_spark.operators.similarity import _bucket_col, _hyperplanes
+    from pim_orc_spark.operators.similarity import _bucket_text
 
-    planes = _hyperplanes()
     e = spread(spark, load_table(spark, sf_dir, "embeddings"))
     v = (
         e.select("vec_id", as_double_vec("embedding", EMB_DIM).alias("v0"))
-        .withColumn("bucket", _bucket_col(F.col("v0"), planes))
+        .selectExpr("vec_id", "v0", f"{_bucket_text('v0')} AS bucket")
         .select("vec_id", unit_vec("v0", EMB_DIM).alias("u"), "bucket")
     )
     a = v.select(

@@ -240,14 +240,6 @@ def read_orc_footer_facts_fileobj(fh, size: int, name: str = "<stream>") -> dict
 # from the public orc_proto.proto messages, so a "which stripes can
 # predicate X skip" report needs no JVM and no row data.
 
-# Footer.types[].kind enum (orc_proto.proto Type.Kind), index = value
-TYPE_KINDS = (
-    "BOOLEAN", "BYTE", "SHORT", "INT", "LONG", "FLOAT", "DOUBLE",
-    "STRING", "BINARY", "TIMESTAMP", "LIST", "MAP", "STRUCT", "UNION",
-    "DECIMAL", "DATE", "VARCHAR", "CHAR", "TIMESTAMP_INSTANT",
-)
-
-
 def _zigzag(v: int) -> int:
     """Decode protobuf sint (IntegerStatistics min/max/sum are sint64)."""
     return (v >> 1) ^ -(v & 1)

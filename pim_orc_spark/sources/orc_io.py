@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pim_orc_spark.catalog import load_table
-from pim_orc_spark.fsutil import versioned_cache_dir
+from pim_orc_spark.fsutil import atomic_build, versioned_cache_dir
 from pim_orc_spark.functions.numeric import cents, exact_sum, exact_sum_sql
 from pim_orc_spark.session import ensure_parity_confs
 
@@ -62,12 +62,13 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 
 def orc_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The parquet fixture table, materialized once as reference-parity
-    ORC and read back. Idempotent per (sf_dir, table): the write happens
-    only if the ORC copy is absent, so repeated queries pay footer reads
-    only."""
+    ORC and read back. Idempotent per (sf_dir, table) through
+    ``atomic_build``: the write happens only if the ORC copy is absent,
+    so repeated queries pay one marker check and footer reads only."""
     path = versioned_cache_dir(_ORC_CACHE_ROOT, sf_dir, name)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_orc(load_table(spark, sf_dir, name), path)
+    atomic_build(
+        path, lambda tmp: write_orc(load_table(spark, sf_dir, name), tmp)
+    )
     return read_orc(spark, path)
 
 
@@ -135,7 +136,8 @@ def text_format_table(
     ISO-8601 with µs precision."""
     path = versioned_cache_dir(_ORC_CACHE_ROOT, sf_dir, f"{name}_{fmt}")
     src = load_table(spark, sf_dir, name)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(tmp: str) -> None:
         w = src.write.mode("overwrite")
         if fmt == "csv":
             w = w.option("header", "true").option(
@@ -148,7 +150,9 @@ def text_format_table(
             w = w.option("rowTag", "row").option(
                 "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
             )
-        w.format(fmt).save(path)
+        w.format(fmt).save(tmp)
+
+    atomic_build(path, build)
     r = spark.read.schema(src.schema)
     if fmt == "csv":
         r = r.option("header", "true").option(
@@ -203,13 +207,13 @@ def partitioned_table(
     under PartitionFilters, with zero data or footer reads outside the
     selected partition. Idempotent per (sf_dir, table, column)."""
     path = versioned_cache_dir(_ORC_CACHE_ROOT, sf_dir, f"{name}_by_{part_col}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, name)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(path)
-        )
+    atomic_build(
+        path,
+        lambda tmp: load_table(spark, sf_dir, name)
+        .write.mode("overwrite")
+        .partitionBy(part_col)
+        .parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -248,8 +252,6 @@ def evolved_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directory (which could leave duplicated even-orderkey files a
     # marker then blesses forever), and a loser can never delete a
     # winner's completed build.
-    from pim_orc_spark.fsutil import atomic_build
-
     def build(tmp: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
         v1 = li.filter(F.col("l_orderkey") % 2 == 1).select(

@@ -35,39 +35,26 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pim_orc_spark.catalog import normalize_event_ts
+from pim_orc_spark.catalog import normalize_event_ts, parquet_schema
 from pim_orc_spark.functions.numeric import (
     cents,
     cents_sql,
     exact_sum,
     exact_sum_sql,
 )
-from pim_orc_spark.fsutil import table_version
 from pim_orc_spark.session import ensure_parity_confs
 
 WINDOW = "10 minutes"
 
 
-# (path, table_version) → schema: a stream's declared schema is immutable
-# per file generation; re-inferring it from the footer on every query
-# START (each bench iteration, each test) re-paid a batch footer read
-# + plan analysis (~0.14 s/start measured at r16). A production stream
-# declares its schema once at deployment — this cache is that.
-_STREAM_SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet. Schema comes from a
-    batch footer read (streams must declare schemas up front, cached
-    per file generation); the nanos→micros ts normalization matches
-    the batch catalog exactly."""
+    """File-source stream over the events parquet. Schema comes from
+    the batch catalog's footer-schema cache (streams must declare
+    schemas up front; re-inferring it per query start re-paid a footer
+    read + plan analysis, ~0.14 s/start at r16); the nanos→micros ts
+    normalization matches the batch catalog exactly."""
     ensure_parity_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    skey = (os.path.abspath(path), table_version(path))
-    schema = _STREAM_SCHEMA_CACHE.get(skey)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _STREAM_SCHEMA_CACHE[skey] = schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
     # File streams take a directory; select just the events file from the
     # fixture dir. A production deployment points at a growing directory
     # (or Kafka) — everything downstream is unchanged.

@@ -218,6 +218,21 @@ def test_atomic_build_protocol(tmp_path):
     assert not os.path.exists(os.path.join(target3, "halfwritten"))
 
 
+def test_cache_materializations_go_through_atomic_build(spark, sf_dir):
+    """The ORC copy, the text-format copy and the partitioned layout
+    install through atomic_build: each cache directory carries its
+    marker, so a half-written directory left by a killed build is
+    rebuilt instead of trusted behind a bare _SUCCESS file."""
+    from pim_orc_spark.fsutil import MARKER
+
+    orc_io.orc_table(spark, sf_dir, "region")
+    orc_io.text_format_table(spark, sf_dir, "region", "csv")
+    orc_io.partitioned_table(spark, sf_dir, "region", "r_regionkey")
+    for name in ("region", "region_csv", "region_by_r_regionkey"):
+        path = versioned_cache_dir(orc_io._ORC_CACHE_ROOT, sf_dir, name)
+        assert os.path.exists(os.path.join(path, MARKER)), name
+
+
 def test_atomic_build_concurrent_builders(tmp_path):
     """Race the protocol for real: N processes build the same cache
     concurrently, each writing its own payload. Exactly one build must
