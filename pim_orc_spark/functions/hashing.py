@@ -61,10 +61,12 @@ _FMIX_C2 = 0xC2B2AE35
 _U32 = 1 << 32
 
 
-def fmix32(h: Column) -> Column:
-    """Murmur3's fmix32 finalizer over a non-negative bigint column
+def _fmix32_text(expr: str, xor, shr) -> str:
+    """Murmur3's fmix32 finalizer as SQL text over a non-negative bigint
     holding a value < 2^32 — full avalanche: every output bit depends
-    on every input bit.
+    on every input bit. ``xor(a, b)`` and ``shr(a, n)`` spell the
+    engine's bitwise XOR and right shift; the rest of the text is the
+    same in Spark and DuckDB.
 
     WHY IT EXISTS: ``poly_hash`` values live below 2^31−1, and for
     SHORT tokens they concentrate far lower (a 4-char base-26 word
@@ -78,42 +80,42 @@ def fmix32(h: Column) -> Column:
 
     The multiplies are SPLIT 16/16 (hi·c mod 2^16 recombined with
     lo·c) so every intermediate stays < 2^49: h·0xC2B2AE35 on a full
-    32-bit h would overflow signed int64 in both engines. Portable:
-    ``fmix32_sql`` computes the identical value in DuckDB (equality
-    pytest across the u32 range edges)."""
+    32-bit h would overflow signed int64 in both engines.
 
-    def mul32(x: Column, c: int) -> Column:
-        lo = x.bitwiseAND(F.lit(0xFFFF)) * F.lit(c)
-        hi = ((F.shiftright(x, 16) * F.lit(c)) % F.lit(0x10000)) * F.lit(
-            0x10000
-        )
-        return (lo + hi) % F.lit(_U32)
-
-    h = h.bitwiseXOR(F.shiftright(h, 16))
-    h = mul32(h, _FMIX_C1)
-    h = h.bitwiseXOR(F.shiftright(h, 13))
-    h = mul32(h, _FMIX_C2)
-    return h.bitwiseXOR(F.shiftright(h, 16))
-
-
-def fmix32_sql(expr: str) -> str:
-    """DuckDB fragment computing the identical fmix32. ``expr`` should
-    be a PLAIN COLUMN REFERENCE: each mixing stage references its
-    input multiple times, so a computed expression would be
-    re-evaluated combinatorially (the let-binding hazard poly_hash
-    documents) — stage it through a CTE first, as _simhash_sql does."""
+    ``expr`` should be a PLAIN COLUMN or lambda-variable reference:
+    each mixing stage references its input multiple times, so a
+    computed expression would be re-evaluated combinatorially (the
+    let-binding hazard poly_hash documents)."""
 
     def mul32(x: str, c: int) -> str:
         return (
             f"((({x}) & 65535) * {c} + "
-            f"(((({x}) >> 16) * {c}) % 65536) * 65536) % {_U32}"
+            f"((({shr(x, 16)}) * {c}) % 65536) * 65536) % {_U32}"
         )
 
-    s = f"xor({expr}, ({expr}) >> 16)"
+    s = xor(expr, shr(expr, 16))
     s = mul32(s, _FMIX_C1)
-    s = f"xor({s}, ({s}) >> 13)"
+    s = xor(s, shr(s, 13))
     s = mul32(s, _FMIX_C2)
-    return f"xor({s}, ({s}) >> 16)"
+    return xor(s, shr(s, 16))
+
+
+def fmix32_spark_sql(expr: str) -> str:
+    """Spark SQL text of fmix32 (see ``_fmix32_text``); let-bind a
+    computed input as ``transform(array(<expr>), x -> <this of x>)[0]``."""
+    return _fmix32_text(
+        expr,
+        lambda a, b: f"(({a}) ^ ({b}))",
+        lambda a, n: f"shiftright({a}, {n})",
+    )
+
+
+def fmix32_sql(expr: str) -> str:
+    """DuckDB text of the identical fmix32 (see ``_fmix32_text``); stage
+    a computed input through a CTE first, as _simhash_sql does."""
+    return _fmix32_text(
+        expr, lambda a, b: f"xor({a}, {b})", lambda a, n: f"({a}) >> {n}"
+    )
 
 
 def fmix32_py(h: int) -> int:

@@ -18,9 +18,11 @@ Scale design:
   must reproduce. Not the scale path, and says so.
 - ``dedup_simhash`` — 32-bit SimHash per doc from the portable rolling
   hash, fmix32-finalized (raw poly_hash of short tokens leaves the
-  high bits dead — see the dedup_simhash docstring); near-dup
-  candidates = equal simhash (or small Hamming ball via
-  rotate-and-block at scale). Map-only + one groupBy shuffle.
+  high bits dead — see the dedup_simhash docstring). Map-only + one
+  groupBy shuffle. ``dedup_simhash_pairs`` finds its Hamming ball
+  through ``hamming_pairs``, the one block-pigeonhole pair kernel the
+  SimHash and image pHash (multimodal.py) engines share; each family
+  keeps only its block partition.
 - ``dedup_embedding_cosine`` — cosine near-dup pairs; all-pairs at
   fixture scale, LSH-bucketed variant in similarity.py for scale.
 
@@ -43,7 +45,7 @@ from pim_orc_spark.catalog import load_table
 from pim_orc_spark.session import default_parallelism
 from pim_orc_spark.functions.hashing import (
     MOD,
-    fmix32,
+    fmix32_spark_sql,
     fmix32_sql,
     minhash_params,
     poly_hash,
@@ -1545,90 +1547,96 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling-hash aggregate is evaluated once per row no matter how
     many times the mixing stages reference their input (the
     let-binding idiom poly_hash itself uses); the oracle applies the
-    identical arithmetic via ``fmix32_sql`` staged through a CTE."""
+    identical arithmetic via ``fmix32_sql`` staged through a CTE.
+
+    The mix, the 32 bit-vote sums and their compose are SQL text: one
+    parsed expression each instead of a Column call per operator, each
+    of which is a Py4J round trip."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens("text")).alias("t"))
-    h = tok.select(
-        "doc_id",
-        F.transform(F.array(poly_hash("t")), fmix32).getItem(0).alias("h"),
+    h = tok.select("doc_id", poly_hash("t").alias("h0")).selectExpr(
+        "doc_id", f"transform(array(h0), x -> {fmix32_spark_sql('x')})[0] AS h"
     )
-    bit_sums = [
-        F.sum(
-            (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1)
-        ).alias(f"b{b}")
+    compose = " + ".join(
+        f"IF(SUM((shiftright(h, {b}) & 1) * 2 - 1) > 0, {1 << b}, 0)"
         for b in range(32)
-    ]
-    agg = h.groupBy("doc_id").agg(*bit_sums)
-    simhash = None
-    for b in range(32):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        simhash = term if simhash is None else simhash + term
-    return agg.select("doc_id", simhash.cast("bigint").alias("simhash"))
+    )
+    return h.groupBy("doc_id").agg(
+        F.expr(f"CAST({compose} AS BIGINT)").alias("simhash")
+    )
 
 
 HAMMING_T = 3  # near-dup = simhash Hamming distance ≤ 3
+# The simhash pigeonhole partition: HAMMING_T + 1 = 4 contiguous bytes.
+# Contiguous blocks are fine HERE (unlike phash, whose spatially
+# adjacent hash bits need interleaving): post-fmix32 the bit positions
+# carry no structure, so every disjoint partition is equivalent in
+# expectation.
+SIMHASH_BLOCKS = [
+    f"shiftright(simhash, {8 * i}) & 255" for i in range(HAMMING_T + 1)
+]
 
 
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs within SimHash Hamming distance ≤ 3 via
-    block-pigeonhole candidates — the scale path promised by the module
-    docstring.
+def _hamming_join(
+    hashed: DataFrame, col: str, blocks: list[str]
+) -> DataFrame:
+    """Block-pigeonhole equi-join of a (doc_id, ``col``) hash frame
+    with itself: ordered (doc_a, doc_b, ha, hb) rows agreeing on ≥1 of
+    ``blocks`` — pre-distinct, pre-verify.
 
-    Pigeonhole: split the 32-bit fingerprint into HAMMING_T+1 = 4 byte
-    blocks; two hashes within distance 3 must agree EXACTLY on ≥1 block.
-    Candidates = equi-join per (block index, block value) — a shuffle on
-    8-bit-block keys, never an all-pairs product — then verify with one
-    XOR+popcount. At 100 TB the same shape holds: candidate volume is
-    bounded by block-collision rates, and skewed blocks (common
-    prefixes) are split by AQE skew handling."""
-    sim = dedup_simhash(spark, sf_dir)
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    ``blocks`` is a DISJOINT partition of the hash bits as Spark SQL
+    expressions over ``col``. Hamming distance is per-position, so two
+    hashes within distance t must agree EXACTLY on ≥1 of t+1 blocks
+    under every such partition; the partition is the one free
+    parameter. Candidates are an equi-join per (block index, block
+    value) — a shuffle on block keys, never an all-pairs product. At
+    scale the same shape holds: candidate volume is bounded by
+    block-collision rates, and skewed blocks are split by AQE skew
+    handling."""
+    banded = hashed.selectExpr(
+        "doc_id",
+        f"{col} AS h",
+        f"posexplode(array({', '.join(blocks)})) AS (blk, v)",
+    )
+    left = banded.selectExpr("doc_id AS doc_a", "h AS ha", "blk", "v")
+    right = banded.selectExpr("doc_id AS doc_b", "h AS hb", "blk", "v")
+    return left.join(right, ["blk", "v"]).where("doc_a < doc_b")
+
+
+def hamming_candidates(
+    hashed: DataFrame, col: str, blocks: list[str]
+) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs surviving the block join — a
+    SUPERSET of the Hamming-ball pair set by pigeonhole, and the
+    counted frame for the admission-rate tripwires (the
+    ``lsh_band_candidates`` role): the dead-bit defect fmix32 fixed
+    showed up here as 100.0000% simhash admission on a diverse corpus,
+    two orders of magnitude past the ~1.6% four-block birthday floor."""
+    pairs = _hamming_join(hashed, col, blocks)
+    return pairs.select("doc_a", "doc_b").distinct()
+
+
+def hamming_pairs(
+    hashed: DataFrame, col: str, blocks: list[str], t: int
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair within Hamming distance
+    ``t`` of ``col``: the block-join candidates verified by one
+    XOR+popcount. Lossless when ``blocks`` holds t+1 disjoint blocks."""
     return (
-        _simhash_banded(sim)
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= HAMMING_T)
+        _hamming_join(hashed, col, blocks)
+        .selectExpr("doc_a", "doc_b", "bit_count(ha ^ hb) AS hamming")
+        .where(f"hamming <= {t}")
         .distinct()
     )
 
 
-def _simhash_banded(sim: DataFrame) -> DataFrame:
-    """Byte-block pigeonhole equi-join of a (doc_id, simhash) frame
-    with itself: ordered (doc_a, doc_b, ha, hb) rows agreeing on ≥1
-    of the HAMMING_T+1 byte blocks — pre-distinct, pre-verify.
-    Contiguous byte blocks are fine HERE (unlike phash, whose
-    spatially-adjacent hash bits needed interleaving): post-fmix32
-    the bit positions carry no structure, so every disjoint partition
-    is equivalent in expectation."""
-    n_blocks = HAMMING_T + 1
-    blocks = F.array(
-        *[
-            F.shiftright(F.col("simhash"), 8 * i).bitwiseAND(F.lit(255))
-            for i in range(n_blocks)
-        ]
+def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs within SimHash Hamming distance ≤ HAMMING_T: the
+    shared Hamming-ball kernel (``hamming_pairs``) over the byte blocks
+    ``SIMHASH_BLOCKS``."""
+    return hamming_pairs(
+        dedup_simhash(spark, sf_dir), "simhash", SIMHASH_BLOCKS, HAMMING_T
     )
-    banded = sim.select(
-        "doc_id", "simhash", F.posexplode(blocks).alias("blk", "v")
-    )
-    left = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"), "blk", "v"
-    )
-    right = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"), "blk", "v"
-    )
-    return left.join(right, ["blk", "v"]).filter(
-        F.col("doc_a") < F.col("doc_b")
-    )
-
-
-def simhash_band_candidates(sim: DataFrame) -> DataFrame:
-    """Distinct (doc_a, doc_b) pairs surviving the byte-block join —
-    a SUPERSET of the true Hamming-ball pair set by pigeonhole, and
-    the counted frame for the admission tripwire (the
-    ``lsh_band_candidates`` / ``phash_band_candidates`` role): the
-    dead-bit defect fmix32 fixed showed up here as 100.0000%
-    admission on a diverse corpus, two orders of magnitude past the
-    ~1.6% four-block birthday floor."""
-    return _simhash_banded(sim).select("doc_a", "doc_b").distinct()
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from pim_orc_spark.catalog import load_table
+from pim_orc_spark.operators.dedup import hamming_pairs
 from pim_orc_spark.plans import spread
 
 # Minimum rows per codec-kernel partition (r17; see plans.spread's
@@ -1134,6 +1135,24 @@ PHASH_T = 6  # Hamming threshold on the 64-bit hash
 PHASH_DUP_EVERY = 10  # doc i with i%10==1 near-duplicates doc i-1
 PHASH_MOD = 200  # pixel channel range; +1 perturbation never wraps
 PHASH_MULT = 2654435761  # Knuth mix: decorrelates per-doc coefficients
+# The phash pigeonhole partition: PHASH_T + 1 = 7 disjoint 9-bit blocks,
+# bit-INTERLEAVED (block i = bits {i, i+7, ..., i+56}), not contiguous.
+# Bit 63 rides outside every block, which only shrinks the in-block
+# difference budget. Adjacent ahash bits are adjacent 8×8 sample
+# positions, so contiguous blocks inherit whole-row correlations (a
+# near-constant first sample row left block 0 with 2.7 bits of corpus
+# entropy and the candidate join admitting 26.4% of all pairs at 5k
+# fixture-family images). Stride-7 interleave scatters each block
+# across the sample grid: measured 12.4% admission on the same corpus —
+# 2.1× fewer verify rows for identical output. The residual density is
+# the corpus's limited total hash entropy (~6.5 bits/block), not the
+# partition.
+PHASH_BLOCKS = [
+    " | ".join(
+        f"shiftleft(shiftright(phash, {i + 7 * k}) & 1, {k})" for k in range(9)
+    )
+    for i in range(PHASH_T + 1)
+]
 
 
 def _phash_base(doc_id: int) -> tuple[int, int]:
@@ -1241,14 +1260,11 @@ def multimodal_phash_dedup(
     decode (real parser) → 64-bit average-hash → block-pigeonhole
     candidates → exact Hamming ≤ PHASH_T verify.
 
-    Pigeonhole: PHASH_T+1 = 7 disjoint 9-bit blocks of the hash (bits
-    0..62; bit 63 rides outside every block, which only shrinks the
-    in-block difference budget) — two hashes within distance 6 must
-    agree exactly on ≥1 block, so candidates are an equi-join on
-    (block index, block value), never an all-pairs product. Verify is
-    one XOR+popcount inside codegen; the exact same scale shape as
-    ``dedup_simhash_pairs``, now over decoded image content. The
-    oracle recomputes every hash bit arithmetically from the
+    The candidates and the verify are ``dedup.hamming_pairs``, the
+    pair kernel ``dedup_simhash_pairs`` shares, over the 7 interleaved
+    9-bit blocks of ``PHASH_BLOCKS``: an equi-join on (block index,
+    block value), never an all-pairs product, then one XOR+popcount.
+    The oracle recomputes every hash bit arithmetically from the
     closed-form pixel functions (all-integer threshold L·64 > ΣL), so
     equality certifies decode + hash + candidate join + verify end to
     end."""
@@ -1287,81 +1303,12 @@ def phash_hashes(spark: SparkSession, ids: DataFrame) -> DataFrame:
     ).localCheckpoint()
 
 
-def _phash_banded(hashed: DataFrame) -> DataFrame:
-    """Block-pigeonhole equi-join of a (doc_id, phash) frame with
-    itself: ordered (doc_a, doc_b, ha, hb) rows agreeing on ≥1 of the
-    PHASH_T+1 disjoint 9-bit blocks — pre-distinct, pre-verify.
-
-    The blocks are bit-INTERLEAVED (block i = bits {i, i+7, ...,
-    i+56}), not contiguous: the pigeonhole guarantee holds for ANY
-    disjoint partition of bits 0..62 (Hamming distance is
-    per-position, so two hashes within distance PHASH_T must agree
-    exactly on ≥1 of the 7 blocks under every partition), which makes
-    the partition a free parameter — and adjacent ahash bits are
-    adjacent 8×8 sample positions, so contiguous blocks inherit
-    whole-row correlations (a near-constant first sample row left
-    block 0 with 2.7 bits of corpus entropy and the candidate join
-    admitting 26.4% of all pairs at 5k fixture-family images).
-    Stride-7 interleave scatters each block across the sample grid:
-    measured 12.4% admission on the same corpus — 2.1× fewer verify
-    rows for identical output. The residual density is the corpus's
-    limited total hash entropy (~6.5 bits/block), not the partition."""
-    n_blocks = PHASH_T + 1
-
-    def blk_val(i: int) -> F.Column:
-        v = F.shiftright(F.col("phash"), i).bitwiseAND(F.lit(1))
-        for k in range(1, 9):
-            v = v.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(F.col("phash"), i + 7 * k).bitwiseAND(
-                        F.lit(1)
-                    ),
-                    k,
-                )
-            )
-        return v
-
-    blocks = F.array(*[blk_val(i) for i in range(n_blocks)])
-    banded = hashed.select(
-        "doc_id", "phash", F.posexplode(blocks).alias("blk", "v")
-    )
-    left = banded.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("phash").alias("ha"),
-        "blk",
-        "v",
-    )
-    right = banded.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("hb"),
-        "blk",
-        "v",
-    )
-    return left.join(right, ["blk", "v"]).filter(
-        F.col("doc_a") < F.col("doc_b")
-    )
-
-
-def phash_band_candidates(hashed: DataFrame) -> DataFrame:
-    """Distinct (doc_a, doc_b) pairs surviving the pigeonhole block
-    join — a SUPERSET of the true pair set by construction, and the
-    counted frame for the slope harness's admission-rate invariant
-    (the ``lsh_band_candidates`` / ``_containment_prefix_candidates``
-    role for the image family)."""
-    return _phash_banded(hashed).select("doc_a", "doc_b").distinct()
-
-
 def phash_pairs_from_ids(spark: SparkSession, ids: DataFrame) -> DataFrame:
-    """The full phash engine over any (doc_id) frame — hash stage,
-    pigeonhole candidates, XOR+popcount verify. Semantics and scale
-    notes: see ``multimodal_phash_dedup``."""
-    hashed = phash_hashes(spark, ids)
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        _phash_banded(hashed)
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= PHASH_T)
-        .distinct()
+    """The full phash engine over any (doc_id) frame — hash stage, then
+    the shared Hamming-ball kernel over ``PHASH_BLOCKS``. Semantics and
+    scale notes: see ``multimodal_phash_dedup``."""
+    return hamming_pairs(
+        phash_hashes(spark, ids), "phash", PHASH_BLOCKS, PHASH_T
     )
 
 

@@ -64,19 +64,25 @@ from pim_orc_spark.plans import spread
 VEC_ROWS_PER_PART = 512
 
 
-def _unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings as L2-normalized double vectors, spread past the
-    single file split BEFORE normalization so the per-row unit_vec work
-    parallelizes (computed after a later repartition it would run on
-    one core)."""
-    e = spread(
-        spark,
-        load_table(spark, sf_dir, "embeddings"),
-        rows_per_part=VEC_ROWS_PER_PART,
+def _unit_vectors(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Embeddings as L2-normalized double vectors, twice: spread past
+    the single file split BEFORE normalization so the per-row unit_vec
+    work of the scan parallelizes (computed after a later repartition
+    it would run on one core), and unspread for the bounded collects
+    (query block, codebook sample), whose vec_id predicate cannot push
+    below the repartition — over the spread frame a collect of
+    N_QUERIES rows runs the whole shuffle (the ``_exact_topk``
+    ``q_source`` trade)."""
+    e = load_table(spark, sf_dir, "embeddings")
+    v0 = as_double_vec("embedding", DIM).alias("v0")
+    unit = unit_vec("v0", DIM).alias("v")
+    spread_e = spread(spark, e, rows_per_part=VEC_ROWS_PER_PART)
+    return tuple(
+        f.select("vec_id", v0).select("vec_id", unit) for f in (spread_e, e)
     )
-    return e.select("vec_id", as_double_vec("embedding", DIM).alias("v0")).select(
-        "vec_id", unit_vec("v0", DIM).alias("v")
-    )
+
 
 TOP_K = 10
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -590,11 +596,12 @@ def ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     round() on every double, with no per-element BigDecimal), giving
     bigint components; the numpy matmul over them is exact integer
     arithmetic."""
-    v = _unit_vectors(spark, sf_dir)
-    q8_only = v.selectExpr(
-        "vec_id", f"transform(v, x -> {_half_up_text(f'x * {SQ_SCALE}')}) AS q8"
+    v, v_local = _unit_vectors(spark, sf_dir)
+    q8 = f"transform(v, x -> {_half_up_text(f'x * {SQ_SCALE}')}) AS q8"
+    q8_only = v.selectExpr("vec_id", q8)
+    q_ids, Q8 = _collect_block(
+        v_local.selectExpr("vec_id", q8), QUERY_ROWS, "q8", np.int64
     )
-    q_ids, Q8 = _collect_block(q8_only, QUERY_ROWS, "q8", np.int64)
 
     def int8_blocks(pdf):
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
@@ -658,17 +665,17 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking orders by round(score, 6) with a vec_id tie-break —
     ulp-level noise cannot reorder a quantized key. Scale shape:
     encode+score is the shared partial-top-k kernel."""
-    v = _unit_vectors(spark, sf_dir)
+    v, v_local = _unit_vectors(spark, sf_dir)
 
     def _build_pq():
-        stride = _pq_stride(v.count())
+        stride = _pq_stride(v_local.count())
         # (n_codes, DIM) — subspace s uses C[:, s*8:(s+1)*8]
-        return stride, _collect_block(v, f"vec_id % {stride} = 0")[1]
+        return stride, _collect_block(v_local, f"vec_id % {stride} = 0")[1]
 
     _stride, C = cached_artifact("pq_codebook", spark, sf_dir, _build_pq)
     d_sub = DIM // PQ_M
     C_sub = [C[:, s * d_sub : (s + 1) * d_sub] for s in range(PQ_M)]
-    q_ids, Q = _collect_block(v, QUERY_ROWS)
+    q_ids, Q = _collect_block(v_local, QUERY_ROWS)
 
     # per-subspace lookup tables: LUT[s][j][c] = dot(q_j_s, code_c_s)
     LUT = [Q[:, s * d_sub : (s + 1) * d_sub] @ C_sub[s].T for s in range(PQ_M)]

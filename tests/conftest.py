@@ -19,3 +19,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def round_trips(monkeypatch):
+    """``round_trips(fn, *args)`` calls ``fn(*args)`` and returns (the
+    Py4J gateway round trips it made, its result). Every Column-API
+    call is at least one round trip, so the count is the driver-side
+    cost of building a plan (plus any eager jobs the build fires).
+    Counted by wrapping the gateway connection's ``send_command``."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+
+    def count(fn, *args):
+        calls = 0
+
+        def counted(self, command):
+            nonlocal calls
+            calls += 1
+            return send(self, command)
+
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", counted)
+            result = fn(*args)
+        return calls, result
+
+    return count

@@ -738,7 +738,7 @@ def _corpus_of_width(spark, n_words: int, seed: int = 5):
     return docs.localCheckpoint(), planted
 
 
-def test_minhash_plan_construction_round_trips(spark, monkeypatch):
+def test_minhash_plan_construction_round_trips(spark, round_trips):
     """Building the MinHash pair engine's plan must stay cheap on the
     driver: every Column-API call is its own Py4J gateway round trip,
     and the engine's wide generated expressions (128 signature mins, a
@@ -748,20 +748,9 @@ def test_minhash_plan_construction_round_trips(spark, monkeypatch):
     wrapping the gateway connection's send_command over plan
     construction (which includes its eager dictionary, checkpoint and
     hot-bucket jobs) at the widest narrow-branch dictionary."""
-    from py4j.clientserver import ClientServerConnection
-
     docs, planted = _corpus_of_width(spark, dedup.CARRY_MASK_MAX_WORDS)
-    send = ClientServerConnection.send_command
-    calls = [0]
-
-    def counted(self, command):
-        calls[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    pairs = dedup.minhash_pairs(spark, docs)
-    monkeypatch.undo()
-    assert calls[0] <= 6000, f"{calls[0]} gateway round trips"
+    calls, pairs = round_trips(dedup.minhash_pairs, spark, docs)
+    assert calls <= 6000, f"{calls} gateway round trips"
     assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == planted
     assert len(planted) >= 3
 
@@ -911,6 +900,27 @@ def test_star_contraction_random_graphs_match_union_find(spark):
     check()
 
 
+def test_hamming_plan_construction_round_trips(spark, sf_dir, round_trips):
+    """The SimHash and pHash pair engines are built as SQL text: the
+    block partitions, the fmix32 mix, the 32 bit-vote sums and their
+    compose are one parsed expression each instead of a Column call per
+    operator, each of which is a Py4J round trip. Counted over a warm
+    plan construction (the pHash build's hash-stage checkpoint job
+    included); the Column form cost 5,150-5,606 (dedup_simhash),
+    5,879-6,211 (dedup_simhash_pairs) and 3,320-3,712
+    (multimodal_phash_dedup)."""
+    from pim_orc_spark.operators import multimodal
+
+    for fn, ceiling in (
+        (dedup.dedup_simhash, 800),
+        (dedup.dedup_simhash_pairs, 1200),
+        (multimodal.multimodal_phash_dedup, 600),
+    ):
+        fn(spark, sf_dir)
+        calls, _ = round_trips(fn, spark, sf_dir)
+        assert calls <= ceiling, f"{fn.__name__}: {calls} gateway round trips"
+
+
 def test_simhash_band_admission_stays_near_birthday_floor(spark, tmp_path):
     """The sharper half of the dead-bit tripwire: the byte-block
     candidate join's admission RATE on a diverse corpus must stay
@@ -924,7 +934,8 @@ def test_simhash_band_admission_stays_near_birthday_floor(spark, tmp_path):
     n = 500
     _synth_docs(spark, n, out)
     sim = dedup.dedup_simhash(spark, out)
-    cand = dedup.simhash_band_candidates(sim).count()
+    blocks = dedup.SIMHASH_BLOCKS
+    cand = dedup.hamming_candidates(sim, "simhash", blocks).count()
     rate = cand / (n * (n - 1) / 2)
     assert rate < 0.05, (cand, rate)
 

@@ -111,8 +111,8 @@ def test_poly_hash_contract(fuzz_df):
 
 
 def test_fmix32_contract(spark):
-    """Three-way equality of the Murmur3 fmix32 finalizer — Spark
-    Column (split 16/16 multiplies), DuckDB fragment, and the textbook
+    """Three-way equality of the Murmur3 fmix32 finalizer — Spark SQL
+    text (split 16/16 multiplies), DuckDB fragment, and the textbook
     unsplit Python form — across u32 range edges, the poly_hash output
     range, and random values. The split form exists because h·c on a
     full 32-bit h overflows signed int64; equality with the unsplit
@@ -125,8 +125,8 @@ def test_fmix32_contract(spark):
 
     from pim_orc_spark.functions.hashing import (
         MOD,
-        fmix32,
         fmix32_py,
+        fmix32_spark_sql,
         fmix32_sql,
     )
 
@@ -148,7 +148,7 @@ def test_fmix32_contract(spark):
     sp = {
         r["id"]: r["m"]
         for r in df.select(
-            "id", fmix32(F.col("h")).alias("m")
+            "id", F.expr(fmix32_spark_sql("h")).alias("m")
         ).collect()
     }
     con = duckdb.connect()

@@ -936,6 +936,30 @@ def test_containment_prefix_plan_has_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan, plan[:1500]
 
 
+def test_hamming_engines_join_on_block_keys(spark, sf_dir):
+    """Both Hamming-ball engines (SimHash pairs and image pHash dedup)
+    run the shared block-pigeonhole kernel: candidates come from an
+    equi-join on (blk, v), the block index and value, and the plan
+    holds NO cartesian or broadcast nested-loop node — the ANN family's
+    no-all-pairs guard (test_scale_paths_have_no_allpairs_join) for the
+    Hamming family."""
+    import re
+
+    from pim_orc_spark.operators.dedup import dedup_simhash_pairs
+    from pim_orc_spark.operators.multimodal import multimodal_phash_dedup
+
+    block_join = re.compile(
+        r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) "
+        r"\[blk#\d+, v#\d+L\], \[blk#\d+, v#\d+L\], Inner"
+    )
+    for fn in (dedup_simhash_pairs, multimodal_phash_dedup):
+        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        plan = plan.toString()
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert block_join.search(plan), plan
+
+
 def test_spread_rows_per_part_caps_fanout_by_input_rows(spark, sf_dir):
     """r17: spread(rows_per_part=N) must fan a tiny parquet input out
     to ceil(rows/N) partitions instead of full parallelism (each
@@ -991,25 +1015,13 @@ def test_exact_sums_aggregate_without_round(spark, sf_dir):
         assert [line for line in aggs if "round(" in line] == [], name
 
 
-def test_exact_sum_plan_construction_round_trips(spark, sf_dir, monkeypatch):
+def test_exact_sum_plan_construction_round_trips(spark, sf_dir, round_trips):
     """The exact aggregates are built as SQL text: one F.expr per
     aggregate instead of a Column call per operator, each of which is a
     Py4J round trip. Counted over a warm plan construction; Column
     algebra cost 123 (q01) and 351 (q08)."""
-    from py4j.clientserver import ClientServerConnection
-
-    send = ClientServerConnection.send_command
-    calls = [0]
-
-    def counted(self, command):
-        calls[0] += 1
-        return send(self, command)
-
     queries = _cents_queries()
     for name, ceiling in (("q01_flagship_sum", 60), ("q08_fact_join_agg", 180)):
         queries[name](spark, sf_dir)
-        calls[0] = 0
-        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-        queries[name](spark, sf_dir)
-        monkeypatch.undo()
-        assert calls[0] <= ceiling, f"{name}: {calls[0]} gateway round trips"
+        calls, _ = round_trips(queries[name], spark, sf_dir)
+        assert calls <= ceiling, f"{name}: {calls} gateway round trips"

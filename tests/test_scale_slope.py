@@ -763,7 +763,7 @@ def test_ivf_scan_scales_one_decade_up(spark, tmp_path, slope_json):
 # of corpus entropy per 9-bit block (shared gradient structure), so
 # the measured floor is ~12% under the stride-7 interleaved
 # partition (26% under the naive contiguous one — the measurement
-# that motivated the interleave, see _phash_banded). The invariant:
+# that motivated the interleave, see PHASH_BLOCKS). The invariant:
 # flat across the decade and far below a degenerate-hash regime
 # (pre-round-13 linear-gradient pixels concentrated the hash space so
 # badly that 32% of ALL pairs verified within Hamming 6). The corpus
@@ -785,9 +785,10 @@ PHASH_PASSES = int(os.environ.get("SPARK_GRAFT_SLOPE_PASSES", "3"))
 @pytest.mark.perf
 def test_phash_hamming_scales_one_decade_up(spark, slope_json):
     from bench import calibration
+    from pim_orc_spark.operators.dedup import hamming_candidates
     from pim_orc_spark.operators.multimodal import (
+        PHASH_BLOCKS,
         PHASH_DUP_EVERY,
-        phash_band_candidates,
         phash_hashes,
         phash_pairs_from_ids,
     )
@@ -808,7 +809,9 @@ def test_phash_hamming_scales_one_decade_up(spark, slope_json):
     cands, rates = {}, {}
     for label, n in n_of.items():
         hashed = phash_hashes(spark, ids[label])
-        cands[label] = phash_band_candidates(hashed).count()
+        cands[label] = hamming_candidates(
+            hashed, "phash", PHASH_BLOCKS
+        ).count()
         rates[label] = cands[label] / (n * (n - 1) / 2)
 
     # wall: full engine (encode → decode → hash → candidates →

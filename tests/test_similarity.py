@@ -97,7 +97,7 @@ def test_lsh_recall_vs_exact(spark, sf_dir):
         assert r.cos_sim <= exact[(r.query_id, 1)] + 1e-9
 
 
-def test_plane_dot_plan_construction_round_trips(spark, sf_dir, monkeypatch):
+def test_plane_dot_plan_construction_round_trips(spark, sf_dir, round_trips):
     """Plane dots and LSH buckets are built as SQL text: one parsed
     expression instead of a Column call per plane literal, each of
     which is a Py4J round trip. Counted over a warm plan construction
@@ -105,16 +105,7 @@ def test_plane_dot_plan_construction_round_trips(spark, sf_dir, monkeypatch):
     Column form cost at least 7,241 (ann_rp_topk), 2,164
     (ann_lsh_bucketed), 2,041 (dedup_embedding_lsh) and 13,793
     (ann_recall)."""
-    from py4j.clientserver import ClientServerConnection
-
     from pim_orc_spark.operators import dedup
-
-    send = ClientServerConnection.send_command
-    calls = [0]
-
-    def counted(self, command):
-        calls[0] += 1
-        return send(self, command)
 
     for fn, ceiling in (
         (similarity.ann_rp_topk, 1200),
@@ -123,13 +114,8 @@ def test_plane_dot_plan_construction_round_trips(spark, sf_dir, monkeypatch):
         (similarity.ann_recall, 5000),
     ):
         fn(spark, sf_dir)
-        calls[0] = 0
-        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-        fn(spark, sf_dir)
-        monkeypatch.undo()
-        assert calls[0] <= ceiling, (
-            f"{fn.__name__}: {calls[0]} gateway round trips"
-        )
+        calls, _ = round_trips(fn, spark, sf_dir)
+        assert calls <= ceiling, f"{fn.__name__}: {calls} gateway round trips"
 
 
 def test_scale_paths_have_no_allpairs_join(spark, sf_dir):
