@@ -15,8 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from pim_orc_spark.fsutil import table_version
+from pim_orc_spark.fsutil import versioned_memo
 from pim_orc_spark.session import ensure_parity_confs
 
 TABLE_NAMES = (
@@ -61,7 +62,7 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Resolved-schema cache: (absolute path, mtime_ns) → StructType. A
+# Resolved-schema cache: absolute path → (table_version, StructType). A
 # table's schema is immutable per file generation, but the bare
 # ``spark.read.parquet(path)`` re-infers it from the footer on EVERY
 # call — ~97 ms/table measured at r16, paid by every query
@@ -72,13 +73,14 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 # shared-plan cache broke cogroup's two nation-ranked sides with an
 # ambiguous-self-join analysis error). This is what a production
 # catalog does: schema resolved once at registration, not per query.
-# The table_version key invalidates on fixture regeneration. The batch
-# catalog and the stream source (a stream must declare its schema up
-# front) share it through ``parquet_schema``.
-_SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
+# The table_version key invalidates on fixture regeneration
+# (fsutil.versioned_memo). The batch catalog and the stream source (a
+# stream must declare its schema up front) share it through
+# ``parquet_schema``.
+_SCHEMA_CACHE: dict[str, tuple[int, StructType]] = {}
 
 
-def parquet_schema(spark: SparkSession, path: str):
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The footer schema of the parquet table at ``path``, read once
     per file generation."""
     path = os.path.abspath(path)
@@ -86,16 +88,9 @@ def parquet_schema(spark: SparkSession, path: str):
     # in-place part-file rewrite moves only the file's mtime, and a
     # stale schema served to read.schema() would surface as nulls or
     # an analysis error.
-    key = (path, table_version(path))
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        # prune superseded generations of the same path so a rewritten
-        # fixture directory doesn't pin dead schemas
-        for k in [k for k in _SCHEMA_CACHE if k[0] == path and k != key]:
-            del _SCHEMA_CACHE[k]
-        _SCHEMA_CACHE[key] = schema
-    return schema
+    return versioned_memo(
+        _SCHEMA_CACHE, path, lambda: spark.read.parquet(path).schema
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -6,7 +6,8 @@ the evolved-table cache, the pre-split stream source, the maintenance
 rewrites). One implementation so a protocol fix lands everywhere at
 once (round-5 review: three inline copies had drifted into a shared
 TOCTOU race). ``table_version`` is, for the same reason, the single
-version stamp every table-keyed cache uses.
+version stamp every table-keyed cache uses, and ``versioned_memo`` the
+single in-process get-or-build over it.
 """
 
 from __future__ import annotations
@@ -15,8 +16,11 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable
+from typing import TypeVar
 
 MARKER = "_BUILD_COMPLETE"
+
+T = TypeVar("T")
 
 
 def table_version(path: str) -> int:
@@ -46,6 +50,23 @@ def table_version(path: str) -> int:
         return mt
     except OSError:
         return 0
+
+
+def versioned_memo(
+    cache: dict[str, tuple[int, T]], path: str, build: Callable[[], T]
+) -> T:
+    """``build()``'s value for the current generation of ``path``,
+    computed once per generation: one ``table_version`` stat plus one
+    dict lookup per call. ``cache`` maps a path to (version, value), so
+    a rewrite REPLACES the superseded generation's entry instead of
+    pinning it beside the new one."""
+    version = table_version(path)
+    hit = cache.get(path)
+    if hit is not None and hit[0] == version:
+        return hit[1]
+    value = build()
+    cache[path] = (version, value)
+    return value
 
 
 def atomic_build(path: str, build: Callable[[str], None]) -> str:

@@ -82,10 +82,12 @@ def _fmix32_text(expr: str, xor, shr) -> str:
     lo·c) so every intermediate stays < 2^49: h·0xC2B2AE35 on a full
     32-bit h would overflow signed int64 in both engines.
 
-    ``expr`` should be a PLAIN COLUMN or lambda-variable reference:
-    each mixing stage references its input multiple times, so a
-    computed expression would be re-evaluated combinatorially (the
-    let-binding hazard poly_hash documents)."""
+    ``expr`` should be a PLAIN COLUMN reference: each mixing stage
+    references its input multiple times, so a computed expression
+    would be repeated combinatorially in the text. Over a plain column
+    in its own projection, Spark's whole-stage codegen eliminates the
+    repeated subexpressions and computes each stage once; DuckDB gets
+    its input staged through a CTE."""
 
     def mul32(x: str, c: int) -> str:
         return (
@@ -101,8 +103,10 @@ def _fmix32_text(expr: str, xor, shr) -> str:
 
 
 def fmix32_spark_sql(expr: str) -> str:
-    """Spark SQL text of fmix32 (see ``_fmix32_text``); let-bind a
-    computed input as ``transform(array(<expr>), x -> <this of x>)[0]``."""
+    """Spark SQL text of fmix32 (see ``_fmix32_text``). Apply it to a
+    plain column in its own ``selectExpr``, as ``dedup_simhash`` does;
+    a ``transform`` lambda would evaluate it interpreted, without
+    subexpression elimination."""
     return _fmix32_text(
         expr,
         lambda a, b: f"(({a}) ^ ({b}))",

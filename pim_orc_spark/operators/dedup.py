@@ -1543,11 +1543,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ``dedup_simhash_pairs`` identical for EVERY doc — 100.0000%
     candidate admission, the banded join silently degraded to
     all-pairs). Mixed, the same corpus measures ~1-2% admission. The
-    mix is applied inside a single-element-array transform so the
-    rolling-hash aggregate is evaluated once per row no matter how
-    many times the mixing stages reference their input (the
-    let-binding idiom poly_hash itself uses); the oracle applies the
-    identical arithmetic via ``fmix32_sql`` staged through a CTE.
+    mix is its own projection over the plain ``h0`` column: Catalyst
+    keeps the rolling-hash ``aggregate`` below it (CollapseProject
+    does not inline an expensive expression referenced more than
+    once), and whole-stage codegen's subexpression elimination
+    computes each mixing stage once, where a ``transform`` lambda
+    would run interpreted and rebuild every stage per reference. The
+    oracle applies the identical arithmetic via ``fmix32_sql`` staged
+    through a CTE.
 
     The mix, the 32 bit-vote sums and their compose are SQL text: one
     parsed expression each instead of a Column call per operator, each
@@ -1555,7 +1558,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens("text")).alias("t"))
     h = tok.select("doc_id", poly_hash("t").alias("h0")).selectExpr(
-        "doc_id", f"transform(array(h0), x -> {fmix32_spark_sql('x')})[0] AS h"
+        "doc_id", f"{fmix32_spark_sql('h0')} AS h"
     )
     compose = " + ".join(
         f"IF(SUM((shiftright(h, {b}) & 1) * 2 - 1) > 0, {1 << b}, 0)"

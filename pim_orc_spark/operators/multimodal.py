@@ -3,12 +3,18 @@ binary columns + typed metadata, processed by Arrow-batched Python).
 
 The container has no image/audio libraries, so the PIL/libvips-class
 ``decode_image`` entry point is a clearly-marked stub — but the decode
-STAGE is not stub-only: three REAL codecs implemented here run
-in-container (binary P6 PPM, RIFF/WAVE PCM, 24bpp BI_RGB BMP — numpy +
-stdlib only), each through the full encode → binary column → decode →
-features pipeline with closed-form SQL oracles. Everything around
-them — the binary column schema, Arrow batch shape, ``mapInPandas``
-plumbing, partition behavior — is likewise real and oracle-checked:
+STAGE is not stub-only: four REAL codecs implemented here run
+in-container (binary P6 PPM, 24bpp BI_RGB BMP, RIFF/WAVE PCM and
+DEFLATE-compressed PNG — numpy + stdlib only), each through the full
+encode → binary column → decode → features pipeline with closed-form
+SQL oracles, plus the reference's own Snappy block codec
+(``snappy_block_decode``) and a decode → perceptual-hash near-dup
+engine (``multimodal_phash_dedup``). All of them run on ONE
+per-document kernel, ``_docwise``; each codec contributes only its
+payload builder, its decoder and its feature reduction. Everything
+around them — the binary column schema, Arrow batch shape,
+``mapInPandas`` plumbing, partition behavior — is likewise real and
+oracle-checked:
 
 - ``multimodal_features`` materializes a binary payload column (the
   UTF-8 bytes of the document text standing in for an image blob) plus
@@ -21,7 +27,8 @@ plumbing, partition behavior — is likewise real and oracle-checked:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 from typing import Any
 
 import numpy as np
@@ -37,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from pim_orc_spark.catalog import load_table
+from pim_orc_spark.functions.pysnappy import snappy_compress, snappy_decompress
 from pim_orc_spark.operators.dedup import hamming_pairs
 from pim_orc_spark.plans import spread
 
@@ -51,6 +59,87 @@ from pim_orc_spark.plans import spread
 # footer row counts, so past 512 x parallelism rows the fan-out is
 # unchanged (real corpora keep full parallelism).
 MM_ROWS_PER_PART = 512
+
+
+def _documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The documents table (projected to ``cols`` when given), spread to
+    ``MM_ROWS_PER_PART`` rows per partition: the one source every
+    operator of this family scans."""
+    d = load_table(spark, sf_dir, "documents")
+    return spread(
+        spark, d.select(*cols) if cols else d, rows_per_part=MM_ROWS_PER_PART
+    )
+
+
+def _pandas_dtype(field: StructField) -> Any:
+    if isinstance(field.dataType, BooleanType):
+        return "bool"
+    return "int64" if isinstance(field.dataType, LongType) else object
+
+
+def _docwise_batches(
+    batches: Iterator[pd.DataFrame],
+    src: str,
+    fn: Callable[[Any], tuple],
+    schema: StructType,
+) -> Iterator[pd.DataFrame]:
+    """The per-document kernel behind ``_docwise``: for each row, ``fn``
+    of its ``src`` value (an ``int`` doc id or the ``bytes`` payload)
+    returns the values of every ``schema`` field after ``doc_id``, in
+    order. An empty batch yields an empty frame of the same dtypes."""
+    conv = int if src == "doc_id" else bytes
+    fields = schema.fields[1:]
+    for pdf in batches:
+        rows = [fn(conv(v)) for v in pdf[src]]
+        cols = list(zip(*rows)) if rows else [()] * len(fields)
+        out = {"doc_id": pdf["doc_id"].astype("int64").to_numpy()}
+        for f, col in zip(fields, cols):
+            out[f.name] = pd.Series(list(col), dtype=_pandas_dtype(f))
+        yield pd.DataFrame(out)
+
+
+def _docwise(
+    frame: DataFrame, src: str, fn: Callable[[Any], tuple], schema: StructType
+) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` stage that maps each document
+    of ``frame`` to one ``schema`` row: ``doc_id``, then ``fn(src)``.
+    Every codec stage of this module (encode, decode + features,
+    hash, Snappy round trip) is one call; the per-row Python is the
+    codec itself, and the per-BYTE work stays inside numpy/zlib."""
+    return frame.mapInPandas(
+        partial(_docwise_batches, src=src, fn=fn, schema=schema), schema
+    )
+
+
+PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def _codec_decode(
+    spark: SparkSession,
+    sf_dir: str,
+    payload_of: Callable[[int], bytes],
+    decode: Callable[[bytes], Any],
+    features: Callable[[Any], tuple],
+    schema: StructType,
+) -> DataFrame:
+    """encode → binary column → decode → features over every document:
+    ``payload_of`` builds each doc's payload through the real encoder,
+    ``decode`` is the real parser, ``features`` reduces its output to
+    the exact integers of ``schema``. Map-only: two chained Python
+    stages, no shuffle."""
+    payloads = _docwise(
+        _documents(spark, sf_dir, "doc_id"),
+        "doc_id",
+        lambda d: (payload_of(d),),
+        PAYLOAD_SCHEMA,
+    )
+    return _docwise(payloads, "payload", lambda p: features(decode(p)), schema)
+
 
 CHECKSUM_MOD = 997
 
@@ -153,12 +242,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column pipeline: payload → mapInPandas feature extraction.
     Map-only plan: FileScan → Project(encode) → ArrowEvalPython; scales
     linearly, no shuffle."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents"),
-        rows_per_part=MM_ROWS_PER_PART,
-    )
-    payloads = with_binary_payload(d)
+    payloads = with_binary_payload(_documents(spark, sf_dir))
     return payloads.mapInPandas(_extract_features, FEATURE_SCHEMA)
 
 
@@ -222,12 +306,9 @@ def multimodal_features_arrow(
     batch transport for byte-dense payload columns. Identical map-only
     plan shape and the identical oracle; a pytest also diffs it
     row-for-row against the pandas twin."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents"),
-        rows_per_part=MM_ROWS_PER_PART,
+    payloads = with_binary_payload(_documents(spark, sf_dir)).select(
+        "doc_id", "payload"
     )
-    payloads = with_binary_payload(d).select("doc_id", "payload")
     return payloads.mapInArrow(_extract_features_arrow, FEATURE_SCHEMA)
 
 
@@ -283,12 +364,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     features. Map-only (the fan-out happens inside the Arrow batch);
     at 100 TB the same kernel wraps a real video decoder and the
     partitioning/schema/batch shape is unchanged."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents"),
-        rows_per_part=MM_ROWS_PER_PART,
-    )
-    payloads = with_binary_payload(d)
+    payloads = with_binary_payload(_documents(spark, sf_dir))
     return payloads.mapInPandas(_sample_frames, FRAME_SCHEMA)
 
 
@@ -347,12 +423,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the brief's decode/feature/resize/frame-sample set. Map-only like
     its siblings: FileScan → Project(encode) → ArrowEvalPython, linear
     at any corpus size, no shuffle."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents"),
-        rows_per_part=MM_ROWS_PER_PART,
-    )
-    payloads = with_binary_payload(d)
+    payloads = with_binary_payload(_documents(spark, sf_dir))
     return payloads.mapInPandas(_resize_payloads, RESIZE_SCHEMA)
 
 
@@ -369,12 +440,7 @@ def multimodal_integrity_audit(
 
     Scale shape: pure Catalyst (length(payload) vs meta.declared_len
     — NO Python), map-side partial aggregate, |origins| output rows."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents"),
-        rows_per_part=MM_ROWS_PER_PART,
-    )
-    p = with_binary_payload(d)
+    p = with_binary_payload(_documents(spark, sf_dir))
     drift = F.abs(
         F.length(F.col("payload")) - F.col("meta.declared_len")
     )
@@ -476,47 +542,17 @@ PPM_FEATURE_SCHEMA = StructType(
 )
 
 
-def _encode_ppm_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Ingest kernel: synthesize each doc's deterministic image and
-    serialize it through the REAL encoder — the batch shape of any
-    binary-asset ingest stage."""
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        payloads = []
-        for doc_id in ids:
-            w, h = _ppm_dims(int(doc_id))
-            payloads.append(encode_ppm(_ppm_pixels(int(doc_id), w, h)))
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+def _ppm_payload(doc_id: int) -> bytes:
+    return encode_ppm(_ppm_pixels(doc_id, *_ppm_dims(doc_id)))
 
 
-def _decode_ppm_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Feature kernel: REAL decode per payload, integer channel sums
-    (exact — keeps the driver hash bit-stable) + decoded geometry."""
-    for pdf in batches:
-        ids, ws, hs, rs, gs, bs = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            img = decode_ppm(bytes(payload)).astype(np.int64)
-            h, w, _ = img.shape
-            ids.append(int(doc_id))
-            ws.append(w)
-            hs.append(h)
-            rs.append(int(img[:, :, 0].sum()))
-            gs.append(int(img[:, :, 1].sum()))
-            bs.append(int(img[:, :, 2].sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int64"),
-                "height": pd.Series(hs, dtype="int64"),
-                "sum_r": pd.Series(rs, dtype="int64"),
-                "sum_g": pd.Series(gs, dtype="int64"),
-                "sum_b": pd.Series(bs, dtype="int64"),
-            }
-        )
+def _rgb_features(img: np.ndarray) -> tuple[int, ...]:
+    """(width, height, sum_r, sum_g, sum_b) of a decoded (h, w, 3)
+    image: exact int64 channel sums, which keep the output hash
+    bit-stable. Shared by the PPM, BMP and PNG pipelines."""
+    img = img.astype(np.int64)
+    h, w, _ = img.shape
+    return (w, h, *(int(img[:, :, c].sum()) for c in range(3)))
 
 
 def multimodal_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,21 +568,9 @@ def multimodal_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (header grammar, geometry, pixel-plane layout) end to end. This
     closes the one gap the stub decode_image left: the family's decode
     stage has now run a real image format in this container."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows_per_part=MM_ROWS_PER_PART,
+    return _codec_decode(
+        spark, sf_dir, _ppm_payload, decode_ppm, _rgb_features, PPM_FEATURE_SCHEMA
     )
-    payloads = d.mapInPandas(
-        _encode_ppm_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(_decode_ppm_batch, PPM_FEATURE_SCHEMA)
 
 
 # Third real codec: BMP (BITMAPFILEHEADER + BITMAPINFOHEADER, 24bpp
@@ -639,42 +663,8 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return bgr[:, :, ::-1].copy()  # BGR → RGB
 
 
-def _encode_bmp_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        payloads = []
-        for doc_id in ids:
-            w, h = _bmp_dims(int(doc_id))
-            payloads.append(encode_bmp(_bmp_pixels(int(doc_id), w, h)))
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def _decode_bmp_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ws, hs, rs, gs, bs = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            img = decode_bmp(bytes(payload)).astype(np.int64)
-            h, w, _ = img.shape
-            ids.append(int(doc_id))
-            ws.append(w)
-            hs.append(h)
-            rs.append(int(img[:, :, 0].sum()))
-            gs.append(int(img[:, :, 1].sum()))
-            bs.append(int(img[:, :, 2].sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int64"),
-                "height": pd.Series(hs, dtype="int64"),
-                "sum_r": pd.Series(rs, dtype="int64"),
-                "sum_g": pd.Series(gs, dtype="int64"),
-                "sum_b": pd.Series(bs, dtype="int64"),
-            }
-        )
+def _bmp_payload(doc_id: int) -> bytes:
+    return encode_bmp(_bmp_pixels(doc_id, *_bmp_dims(doc_id)))
 
 
 def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -686,21 +676,9 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     every padding residue). The oracle recomputes the channel sums
     from the closed-form pixel functions — equality proves the decoder
     undid all three transforms exactly."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows_per_part=MM_ROWS_PER_PART,
+    return _codec_decode(
+        spark, sf_dir, _bmp_payload, decode_bmp, _rgb_features, PPM_FEATURE_SCHEMA
     )
-    payloads = d.mapInPandas(
-        _encode_bmp_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(_decode_bmp_batch, PPM_FEATURE_SCHEMA)
 
 
 # Audio analogue of the PPM path: RIFF/WAVE PCM, the uncompressed
@@ -791,40 +769,16 @@ WAV_FEATURE_SCHEMA = StructType(
 )
 
 
-def _encode_wav_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        payloads = [
-            encode_wav(_wav_samples(int(d), _wav_n_samples(int(d))))
-            for d in ids
-        ]
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+def _wav_payload(doc_id: int) -> bytes:
+    return encode_wav(_wav_samples(doc_id, _wav_n_samples(doc_id)))
 
 
-def _decode_wav_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, rates, ns, sums, maxes = [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rate, samples = decode_wav(bytes(payload))
-            s = samples.astype(np.int64)
-            ids.append(int(doc_id))
-            rates.append(rate)
-            ns.append(len(s))
-            sums.append(int(s.sum()))
-            maxes.append(int(np.abs(s).max()) if len(s) else 0)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "sample_rate": pd.Series(rates, dtype="int64"),
-                "n_samples": pd.Series(ns, dtype="int64"),
-                "sum_amp": pd.Series(sums, dtype="int64"),
-                "max_amp": pd.Series(maxes, dtype="int64"),
-            }
-        )
+def _wav_features(decoded: tuple[int, np.ndarray]) -> tuple[int, ...]:
+    """(sample_rate, n_samples, sum_amp, max_amp) of a decoded WAV, in
+    exact int64 arithmetic."""
+    rate, samples = decoded
+    s = samples.astype(np.int64)
+    return rate, len(s), int(s.sum()), int(np.abs(s).max()) if len(s) else 0
 
 
 def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -835,21 +789,9 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes every statistic from the closed-form sample
     function without parsing a byte. Same map-only Arrow-batched
     plan as the image path."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows_per_part=MM_ROWS_PER_PART,
+    return _codec_decode(
+        spark, sf_dir, _wav_payload, decode_wav, _wav_features, WAV_FEATURE_SCHEMA
     )
-    payloads = d.mapInPandas(
-        _encode_wav_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(_decode_wav_batch, WAV_FEATURE_SCHEMA)
 
 
 # Fourth real codec — and the first COMPRESSED one: PNG (8-bit RGB,
@@ -1053,44 +995,8 @@ def decode_png(payload: bytes) -> np.ndarray:
     return out.astype(np.uint8).reshape(h, w, 3)
 
 
-def _encode_png_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        payloads = []
-        for doc_id in ids:
-            w, h = _png_dims(int(doc_id))
-            payloads.append(
-                encode_png(_png_pixels(int(doc_id), w, h), int(doc_id))
-            )
-        yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-
-def _decode_png_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ws, hs, rs, gs, bs = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            img = decode_png(bytes(payload)).astype(np.int64)
-            h, w, _ = img.shape
-            ids.append(int(doc_id))
-            ws.append(w)
-            hs.append(h)
-            rs.append(int(img[:, :, 0].sum()))
-            gs.append(int(img[:, :, 1].sum()))
-            bs.append(int(img[:, :, 2].sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int64"),
-                "height": pd.Series(hs, dtype="int64"),
-                "sum_r": pd.Series(rs, dtype="int64"),
-                "sum_g": pd.Series(gs, dtype="int64"),
-                "sum_b": pd.Series(bs, dtype="int64"),
-            }
-        )
+def _png_payload(doc_id: int) -> bytes:
+    return encode_png(_png_pixels(doc_id, *_png_dims(doc_id)), doc_id)
 
 
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1105,21 +1011,9 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the channel sums from the closed-form pixel functions
     without parsing a byte, so equality proves signature + chunk walk
     + CRC + inflate + all five scanline unfilters end to end."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows_per_part=MM_ROWS_PER_PART,
+    return _codec_decode(
+        spark, sf_dir, _png_payload, decode_png, _rgb_features, PPM_FEATURE_SCHEMA
     )
-    payloads = d.mapInPandas(
-        _encode_png_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return payloads.mapInPandas(_decode_png_batch, PPM_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------
@@ -1153,6 +1047,14 @@ PHASH_BLOCKS = [
     )
     for i in range(PHASH_T + 1)
 ]
+
+
+PHASH_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("phash", LongType()),
+    ]
+)
 
 
 def _phash_base(doc_id: int) -> tuple[int, int]:
@@ -1216,43 +1118,6 @@ def ahash64(img: np.ndarray) -> int:
     return hv - (1 << 64) if hv >= (1 << 63) else hv
 
 
-def _encode_phash_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        yield pd.DataFrame(
-            {
-                "doc_id": ids,
-                "payload": [
-                    encode_bmp(_phash_pixels(int(i))) for i in ids
-                ],
-            }
-        )
-
-
-def _phash_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """REAL decode → hash: the BMP parser reconstructs the pixels
-    (bottom-up, BGR, padded rows undone) and the hash is computed from
-    the DECODED array — a corrupted decode flips hash bits and the
-    pair set against the oracle."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "phash": pd.Series(
-                    [
-                        ahash64(decode_bmp(bytes(p)))
-                        for p in pdf["payload"]
-                    ],
-                    dtype="int64",
-                ),
-            }
-        )
-
-
 def multimodal_phash_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1268,12 +1133,7 @@ def multimodal_phash_dedup(
     closed-form pixel functions (all-integer threshold L·64 > ΣL), so
     equality certifies decode + hash + candidate join + verify end to
     end."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows_per_part=MM_ROWS_PER_PART,
-    )
-    return phash_pairs_from_ids(spark, d)
+    return phash_pairs_from_ids(spark, _documents(spark, sf_dir, "doc_id"))
 
 
 def phash_hashes(spark: SparkSession, ids: DataFrame) -> DataFrame:
@@ -1283,23 +1143,15 @@ def phash_hashes(spark: SparkSession, ids: DataFrame) -> DataFrame:
     each side re-runs the whole Python encode→decode→hash pipeline
     (the same multi-consumer trade _doc_signatures and _bitset_encode
     make). One 16-byte row per doc."""
-    payloads = ids.mapInPandas(
-        _encode_phash_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
+    payloads = _docwise(
+        ids, "doc_id", lambda d: (encode_bmp(_phash_pixels(d)),), PAYLOAD_SCHEMA
     )
-    return payloads.mapInPandas(
-        _phash_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("phash", LongType()),
-            ]
-        ),
+    # REAL decode → hash: the BMP parser reconstructs the pixels
+    # (bottom-up, BGR, padded rows undone) and the hash is computed from
+    # the DECODED array — a corrupted decode flips hash bits and the
+    # pair set against the oracle.
+    return _docwise(
+        payloads, "payload", lambda p: (ahash64(decode_bmp(p)),), PHASH_SCHEMA
     ).localCheckpoint()
 
 
@@ -1337,34 +1189,25 @@ def _snappy_payload(doc_id: int) -> bytes:
     )
 
 
-def _snappy_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from pim_orc_spark.functions.pysnappy import (
-        snappy_compress,
-        snappy_decompress,
-    )
+def _snappy_facts(doc_id: int) -> tuple:
+    """Compress → decode one doc's payload; facts of the DECODED stream
+    plus whether compression shrank it."""
+    raw = _snappy_payload(doc_id)
+    comp = snappy_compress(raw)
+    dec = snappy_decompress(comp)
+    wsum = sum(p * b for p, b in enumerate(dec))
+    return len(dec), sum(dec), wsum, len(comp) < len(raw)
 
-    for pdf in batches:
-        ids, nb, sb, ws, smaller = [], [], [], [], []
-        for doc_id in pdf["doc_id"].astype("int64"):
-            raw = _snappy_payload(int(doc_id))
-            comp = snappy_compress(raw)
-            dec = snappy_decompress(comp)
-            ids.append(int(doc_id))
-            nb.append(len(dec))
-            sb.append(sum(dec))
-            ws.append(sum(p * b for p, b in enumerate(dec)))
-            smaller.append(len(comp) < len(raw))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_bytes": pd.Series(nb, dtype="int64"),
-                "sum_bytes": pd.Series(sb, dtype="int64"),
-                "wsum": pd.Series(ws, dtype="int64"),
-                "compressed_smaller": pd.Series(smaller, dtype="bool"),
-            }
-        )
+
+SNAPPY_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("n_bytes", LongType()),
+        StructField("sum_bytes", LongType()),
+        StructField("wsum", LongType()),
+        StructField("compressed_smaller", BooleanType()),
+    ]
+)
 
 
 def snappy_block_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1378,22 +1221,8 @@ def snappy_block_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     element families, and the overlapping-copy window logic end to
     end (the same loop dpu_decompress.c:224-300 runs per block).
     Map-only at any corpus size; the per-doc payload is bounded."""
-    d = spread(
-        spark,
-        load_table(spark, sf_dir, "documents").select("doc_id"),
-        rows_per_part=MM_ROWS_PER_PART,
-    )
-    return d.mapInPandas(
-        _snappy_batch,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("n_bytes", LongType()),
-                StructField("sum_bytes", LongType()),
-                StructField("wsum", LongType()),
-                StructField("compressed_smaller", BooleanType()),
-            ]
-        ),
+    return _docwise(
+        _documents(spark, sf_dir, "doc_id"), "doc_id", _snappy_facts, SNAPPY_SCHEMA
     )
 
 
@@ -1431,7 +1260,12 @@ def multimodal_png_dir_features(
         .alias("doc_id"),
         F.col("content").alias("payload"),
     )
-    return payloads.mapInPandas(_decode_png_batch, PPM_FEATURE_SCHEMA)
+    return _docwise(
+        payloads,
+        "payload",
+        lambda p: _rgb_features(decode_png(p)),
+        PPM_FEATURE_SCHEMA,
+    )
 
 
 QUERIES = {
@@ -1613,11 +1447,6 @@ ORACLES = {
 # construction — one oracle serves both
 ORACLES["multimodal_features_arrow"] = ORACLES["multimodal_features"]
 
-# every hash BIT is recomputed arithmetically (integer threshold
-# L·64 > ΣL over the 64 closed-form grid samples), then the same
-# Hamming pair relation — equality certifies decode + hash +
-# candidate join + verify end to end. Bit 63 is folded in as the
-# BIGINT sign term, matching the kernel's signed packing.
 # decompressed-stream facts recomputed from the run construction:
 # run i starts at the cumulative length of runs 0..i-1, so the
 # position-weighted sum of a constant run v of length l starting at s
@@ -1644,6 +1473,11 @@ SELECT doc_id,
 FROM pos GROUP BY doc_id
 """
 
+# every hash BIT is recomputed arithmetically (integer threshold
+# L·64 > ΣL over the 64 closed-form grid samples), then the same
+# Hamming pair relation — equality certifies decode + hash +
+# candidate join + verify end to end. Bit 63 is folded in as the
+# BIGINT sign term, matching the kernel's signed packing.
 ORACLES["multimodal_phash_dedup"] = f"""
 WITH p AS (
   SELECT doc_id,

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pim_orc_spark.fsutil import table_version
+from pim_orc_spark.fsutil import versioned_memo
 
 
 def require_query_execution(df: DataFrame):
@@ -57,9 +57,9 @@ def explode_nonempty(col: Column | str) -> Column:
     return F.explode_outer(c)
 
 
-# (path, table_version) → parquet footer row count. Footer metadata only
-# (never data pages), same invalidation rule as catalog._SCHEMA_CACHE.
-_ROWS_CACHE: dict[tuple[str, int], int] = {}
+# path → (table_version, parquet footer row count). Footer metadata only
+# (never data pages), memoized like catalog._SCHEMA_CACHE.
+_ROWS_CACHE: dict[str, tuple[int, int]] = {}
 
 
 def _input_rows(df: DataFrame) -> int | None:
@@ -73,20 +73,17 @@ def _input_rows(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
+    import pyarrow.parquet as pq
+
     total = 0
     for f in files:
         path = f[len("file:"):] if f.startswith("file:") else f
-        key = (path, table_version(path))
-        rows = _ROWS_CACHE.get(key)
-        if rows is None:
-            try:
-                import pyarrow.parquet as pq
-
-                rows = pq.ParquetFile(path).metadata.num_rows
-            except Exception:
-                return None
-            _ROWS_CACHE[key] = rows
-        total += rows
+        try:
+            total += versioned_memo(
+                _ROWS_CACHE, path, lambda: pq.ParquetFile(path).metadata.num_rows
+            )
+        except Exception:
+            return None
     return total
 
 

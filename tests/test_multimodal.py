@@ -409,6 +409,46 @@ def test_phash_dedup_finds_planted_near_dups(spark, sf_dir):
     assert len(found - planted) <= 0.01 * (n * (n - 1) / 2)
 
 
+CODEC_OPERATORS = (
+    "multimodal_ppm_decode",
+    "multimodal_bmp_decode",
+    "multimodal_png_decode",
+    "multimodal_wav_decode",
+    "multimodal_phash_dedup",
+    "snappy_block_decode",
+)
+
+
+def test_codec_operators_on_empty_input(spark, sf_dir, tmp_path):
+    """The shared per-document kernel on empty input: every codec
+    operator over an empty documents table (doc_id < 0) returns 0 rows
+    with the schema it declares on the full table — snappy's boolean
+    column and pHash's pair frame included — and the kernel maps an
+    empty Arrow batch to an empty frame of the declared dtypes."""
+    import pandas as pd
+
+    from pim_orc_spark.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents").where("doc_id < 0")
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    for name in CODEC_OPERATORS:
+        fn = multimodal.QUERIES[name]
+        empty = fn(spark, str(tmp_path))
+        assert empty.schema == fn(spark, sf_dir).schema, name
+        assert empty.collect() == [], name
+    hashes = multimodal.phash_hashes(spark, docs.select("doc_id"))
+    assert hashes.schema == multimodal.PHASH_SCHEMA
+    assert hashes.count() == 0
+
+    batch = pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
+    (out,) = multimodal._docwise_batches(
+        iter([batch]), "doc_id", multimodal._snappy_facts, multimodal.SNAPPY_SCHEMA
+    )
+    assert list(out.columns) == multimodal.SNAPPY_SCHEMA.fieldNames()
+    assert len(out) == 0
+    assert [str(t) for t in out.dtypes] == ["int64"] * 4 + ["bool"]
+
+
 def test_ahash_is_robust_to_small_retouch_and_sensitive_to_content():
     """Kernel-level contract of the perceptual hash, no Spark: a
     ±1-luminance checkerboard retouch moves the hash ≤ PHASH_T bits;

@@ -575,15 +575,19 @@ def test_round9_operators_have_the_claimed_plan_shapes(spark, sf_dir):
       arrives as a BroadcastHashJoin;
     - dedup_span_report: the single-pass claim — NO join anywhere
       (cross-doc detection is a window over the reduced relation);
-    - multimodal_ppm_decode / _wav_decode: map-only — zero exchanges,
-      both mapInPandas kernels fused into one Python-evaluated chain.
+    - the codec family (multimodal_ppm/bmp/png/wav_decode,
+      snappy_block_decode): map-only — zero exchanges, zero joins, its
+      per-document kernel stages evaluated in Python.
     """
     import re
 
     from pim_orc_spark.operators.dedup import dedup_span_report
     from pim_orc_spark.operators.multimodal import (
+        multimodal_bmp_decode,
+        multimodal_png_decode,
         multimodal_ppm_decode,
         multimodal_wav_decode,
+        snappy_block_decode,
     )
     from pim_orc_spark.operators.text import text_pii_redact, text_url_filter
 
@@ -608,7 +612,13 @@ def test_round9_operators_have_the_claimed_plan_shapes(spark, sf_dir):
     sp = shape(dedup_span_report(spark, sf_dir))
     assert sp["joins"] == 0, sp["plan"][:1500]
 
-    for fn in (multimodal_ppm_decode, multimodal_wav_decode):
+    for fn in (
+        multimodal_ppm_decode,
+        multimodal_bmp_decode,
+        multimodal_png_decode,
+        multimodal_wav_decode,
+        snappy_block_decode,
+    ):
         m = shape(fn(spark, sf_dir))
         assert m["exchanges"] == 0 and m["joins"] == 0, m["plan"][:1500]
         assert m["python"] >= 1, m["plan"][:1500]
@@ -958,6 +968,28 @@ def test_hamming_engines_join_on_block_keys(spark, sf_dir):
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert block_join.search(plan), plan
+
+
+def test_simhash_fmix32_is_its_own_projection(spark, sf_dir):
+    """dedup_simhash mixes the rolling hash with fmix32 in its own
+    projection over the plain h0 column, not inside a
+    ``transform(array(h0), x -> ...)`` lambda: higher-order functions
+    run interpreted and rebuild every mixing stage per reference, while
+    whole-stage codegen's subexpression elimination computes each stage
+    once. The optimized plan keeps exactly one rolling-hash
+    ``aggregate(`` (CollapseProject did not inline h0 into the mix's
+    32 references) and exactly one ``transform(array(``, poly_hash's
+    own let-binding of the token (the lambda-bound mix made it two)."""
+    from pim_orc_spark.operators.dedup import dedup_simhash
+
+    plan = (
+        dedup_simhash(spark, sf_dir)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("aggregate(") == 1, plan[:3000]
+    assert plan.count("transform(array(") == 1, plan[:3000]
 
 
 def test_spread_rows_per_part_caps_fanout_by_input_rows(spark, sf_dir):

@@ -449,6 +449,36 @@ def test_part_file_rewrite_refreshes_batch_and_stream_schemas(spark, tmp_path):
     assert read_events_stream(spark, str(tmp_path)).columns == want
 
 
+def test_footer_memos_hold_one_generation_per_file(spark, tmp_path):
+    """The footer caches (catalog's schemas, plans' row counts) share
+    fsutil.versioned_memo: an in-place rewrite of a parquet file is
+    served fresh, and each cache then holds the file's current
+    generation only, never the superseded one beside it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pim_orc_spark import catalog, plans
+    from pim_orc_spark.fsutil import table_version
+
+    part = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    path = str(part)
+    assert plans._input_rows(spark.read.parquet(path)) == 2
+    assert catalog.parquet_schema(spark, path).fieldNames() == ["a"]
+
+    st = os.stat(part)
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**10))
+    assert plans._input_rows(spark.read.parquet(path)) == 3
+    assert catalog.parquet_schema(spark, path).fieldNames() == ["a", "b"]
+
+    keys = [k for k in plans._ROWS_CACHE if k.endswith(path)]
+    assert len(keys) == 1, keys
+    assert plans._ROWS_CACHE[keys[0]] == (table_version(path), 3)
+    version, schema = catalog._SCHEMA_CACHE[path]
+    assert version == table_version(path) and schema.fieldNames() == ["a", "b"]
+
+
 def test_vacuum_removes_only_stale_generations(tmp_path):
     """VACUUM keeps the live generation of every current source,
     removes stale version-stamped generations, and never touches
