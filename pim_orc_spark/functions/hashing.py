@@ -21,7 +21,10 @@ MOD = 2_147_483_647  # 2^31 - 1
 def poly_hash(col: Column | str) -> Column:
     """hash31(s) = fold(ascii chars): h = (h*31 + code) % (2^31-1).
 
-    Catalyst-only (sequence/transform/aggregate) — runs in codegen.
+    Catalyst-only (sequence/transform/aggregate): no Python worker, but
+    ``transform`` and ``aggregate`` are CodegenFallback expressions, so
+    Spark evaluates this fold interpreted, per row and per character,
+    even inside a whole-stage-codegen stage.
     """
     c = F.col(col) if isinstance(col, str) else col
 

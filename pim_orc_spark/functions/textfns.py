@@ -6,8 +6,10 @@ engines implement this with their regex engines; the pattern uses only
 constructs with identical semantics in Java regex and RE2.
 
 All of this is JVM-side Catalyst code (F.split/F.transform/F.filter) —
-no Python UDFs — so at 100 TB it runs inside whole-stage codegen with
-zero serialization overhead.
+no Python UDFs — so at 100 TB it pays no serialization to a Python
+worker. It is not all codegen'd: ``transform``, ``filter`` and
+``aggregate`` are CodegenFallback expressions, which Spark evaluates
+interpreted per row (and per element) inside the generated stage.
 """
 
 from __future__ import annotations

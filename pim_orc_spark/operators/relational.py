@@ -4342,37 +4342,48 @@ def triangle_counts(und: DataFrame) -> DataFrame:
     Wedge fan-out is bounded by oriented OUT-degree — O(m^1.5) total
     (Suri & Vassilvitskii, WWW'11) — so hubs receive edges instead of
     emitting wedges; the plan is one |E| degree aggregate plus two key
-    shuffles (tail u, then head pair (v,w))."""
-    deg = (
-        und.select(F.explode(F.array("a", "b")).alias("v"))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    e = und.join(
-        deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a"
-    ).join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
+    shuffles (tail u, then head pair (v,w)). Each half is one SQL
+    statement, so the build pays a few Py4J round trips instead of
+    several per Column operator."""
+    spark = und.sparkSession
     # orient low-(degree, id) → high-(degree, id); carry the head's
     # degree so the wedge join can rank-order heads without re-joining
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = e.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dw"),
+    oriented = spark.sql(
+        """
+        WITH deg AS (
+          SELECT v, count(1) AS d
+          FROM (SELECT explode(array(a, b)) AS v FROM {und})
+          GROUP BY v
+        ), e AS (
+          SELECT e.a, e.b, da.d AS da, db.d AS db,
+                 da.d < db.d OR (da.d = db.d AND e.a < e.b) AS a_first
+          FROM {und} e
+          JOIN deg da ON e.a = da.v
+          JOIN deg db ON e.b = db.v
+        )
+        SELECT IF(a_first, a, b) AS u, IF(a_first, b, a) AS w,
+               IF(a_first, db, da) AS dw
+        FROM e
+        """,
+        und=und,
     ).localCheckpoint()
-    x = oriented.select(
-        F.col("u"), F.col("w").alias("v"), F.col("dw").alias("dv")
+    # wedge (u→v, u→w) with rank(v) < rank(w): x.w is v, y.w is w;
+    # the closing edge c is v→w
+    return spark.sql(
+        """
+        SELECT node, count(1) AS cnt
+        FROM (
+          SELECT explode(array(x.u, x.w, y.w)) AS node
+          FROM {o} x
+          JOIN {o} y
+            ON x.u = y.u
+           AND (x.dw < y.dw OR (x.dw = y.dw AND x.w < y.w))
+          JOIN {o} c ON c.u = x.w AND c.w = y.w
+        )
+        GROUP BY node
+        """,
+        o=oriented,
     )
-    y = oriented.select("u", "w", "dw")
-    wedges = x.join(y, "u").filter(
-        (F.col("dv") < F.col("dw"))
-        | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
-    )
-    closing = oriented.select(F.col("u").alias("v"), F.col("w"))
-    tri = wedges.join(closing, ["v", "w"]).select("u", "v", "w")
-    members = tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
-    return members.groupBy("node").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def q73_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:

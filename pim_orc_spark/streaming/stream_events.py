@@ -29,11 +29,17 @@ Scale stance (100 TB / continuous):
 
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
+import tempfile
 import threading
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from pim_orc_spark.catalog import normalize_event_ts, parquet_schema
 from pim_orc_spark.functions.numeric import (
@@ -42,7 +48,7 @@ from pim_orc_spark.functions.numeric import (
     exact_sum,
     exact_sum_sql,
 )
-from pim_orc_spark.session import ensure_parity_confs
+from pim_orc_spark.session import default_parallelism, ensure_parity_confs
 
 WINDOW = "10 minutes"
 
@@ -66,61 +72,107 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(stream)
 
 
-# Streaming state-store partition count. AQE cannot coalesce streaming
+# Streaming state-store partitions: AQE cannot coalesce streaming
 # shuffles, so every one of spark.sql.shuffle.partitions materializes a
-# state store per micro-batch — at the driver's default (64-200) that
-# setup cost dominates a finite fixture run (round 1: only 1 of 6
-# streaming queries fit the driver's correctness sweep budget). The
-# partition count is baked into the query's checkpoint at start, so a
-# production deployment sizes it once for peak state volume.
-STREAM_SHUFFLE_PARTITIONS = "8"
+# state store per micro-batch. At the session's default (2× cores, or
+# the driver's 64-200) that set-up dominates a finite fixture run
+# (round 1: only 1 of 6 streaming queries fit the driver's correctness
+# sweep budget). One task wave is the floor: at most 8, and no more than
+# the cores, so a 4-core host runs 4 stores, not two waves of 4. The
+# count is baked into the query's checkpoint at start, so a production
+# deployment sizes it once for peak state volume.
+STATE_PARTITIONS_MAX = 8
 
 
-# Serializes the shuffle-partition set/restore below: two concurrent
-# run_to_completion calls would otherwise clobber each other's restore
-# value. NOTE the remaining shared-session hazard: the conf is session-
-# global, so a BATCH query planned concurrently in another thread while
-# a streaming run is in flight silently plans with 8 shuffle partitions.
-# The bench/tests/driver all execute serially; a concurrent deployment
-# should plan streaming queries on a dedicated `spark.newSession()`
-# clone instead (per-query conf isolation, shared executors).
-_CONF_LOCK = threading.Lock()
+def state_partitions(spark: SparkSession) -> int:
+    """The shuffle-partition count every streaming run starts with."""
+    return min(STATE_PARTITIONS_MAX, default_parallelism(spark))
+
+
+# Serializes the shuffle-partition set/restore of stream_confs: two
+# concurrent runs would otherwise clobber each other's restore value.
+# Reentrant, so a caller that restarts a query from its own checkpoint
+# can hold it across both runs. NOTE the remaining shared-session
+# hazard: the conf is session-global, so a BATCH query planned
+# concurrently in another thread while a streaming run is in flight
+# silently plans with the state partition count. The bench/tests/driver
+# all execute serially; a concurrent deployment should plan streaming
+# queries on a dedicated `spark.newSession()` clone instead (per-query
+# conf isolation, shared executors).
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def stream_confs(spark: SparkSession) -> Iterator[None]:
+    """Hold the streaming conf lock with ``spark.sql.shuffle.partitions``
+    at ``state_partitions(spark)``; restore the old value on exit."""
+    with _CONF_LOCK:
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(state_partitions(spark))
+        )
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+
+
+def run_stream(
+    stream_df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run ``stream_df`` to completion with Trigger.AvailableNow — it
+    processes everything currently in the source, then stops: the
+    streaming equivalent of the reference's one-shot main() — and
+    return the terminated query.
+
+    ``sink`` is a memory-table name, ``"noop"`` or a foreachBatch
+    function. Without a ``checkpoint`` the run gets a fresh directory,
+    removed when the run ends, failed or not; a caller's checkpoint is
+    left in place, so a crashed run can be restarted from it."""
+    writer = stream_df.writeStream.outputMode(output_mode).trigger(
+        availableNow=True
+    )
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif sink == "noop":
+        writer = writer.format("noop")
+    else:
+        writer = writer.format("memory").queryName(sink)
+    own_checkpoint = checkpoint is None
+    if own_checkpoint:
+        checkpoint = tempfile.mkdtemp(prefix="stream_ckpt_")
+    try:
+        with stream_confs(stream_df.sparkSession):
+            q = writer.option("checkpointLocation", checkpoint).start()
+            q.awaitTermination()
+    finally:
+        if own_checkpoint:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return q
+
+
+# memory-sink table names are session-global: a process-wide counter
+# makes each run's name unique without probing the catalog
+_MEMORY_TABLES = itertools.count()
 
 
 def run_to_completion(
     stream_df: DataFrame, name: str, output_mode: str
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion with AvailableNow into a
-    memory sink and return the resulting (batch) table. AvailableNow
-    processes everything currently in the source then stops — the
-    streaming equivalent of the reference's one-shot main()."""
+    """Run a streaming DataFrame to completion into a memory sink and
+    return the resulting (batch) table. The frame is analyzed against
+    the sink itself, so the sink's temp view is dropped before
+    returning: a session that runs an operator N times holds no N
+    tables."""
     spark = stream_df.sparkSession
-    # memory-sink table names are session-global; make them unique per
-    # invocation so repeated runs (tests, driver sweeps) don't collide.
-    existing = {q.name for q in spark.streams.active if q.name}
-    i = 0
-    while f"{name}_{i}" in existing or spark.catalog.tableExists(
-        f"{name}_{i}"
-    ):
-        i += 1
-    qname = f"{name}_{i}"
-    with _CONF_LOCK:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-        try:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(qname)
+    qname = f"{name}_{next(_MEMORY_TABLES)}"
+    run_stream(stream_df, qname, output_mode)
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return out
 
 
 def windowed_counts_append(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
@@ -406,25 +458,16 @@ ATTRIBUTION_HORIZON = "30 minutes"  # purchase counts if ≤ 30 min after click
 JOIN_WATERMARK_DELAY = "1 hour"
 
 
-def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM inner join — the one streaming shape with state on
-    BOTH sides: every click within ``ATTRIBUTION_HORIZON`` of a same-user
-    purchase, the canonical funnel-attribution query. Joined in append
-    mode on user_id plus an event-time range condition.
-
-    Scale shape: both sides carry ``withWatermark`` and the join
-    condition bounds purchase time to [click_ts, click_ts + horizon], so
-    Spark derives state-eviction watermarks for each side — a click is
-    dropped from state once no future purchase could match it, and vice
-    versa; state held at any instant is one horizon's worth of events
-    per side, which runs forever at any volume. On the finite fixture
-    the whole file is one micro-batch, so the append-mode output equals
-    the batch range join (the oracle). The result rows are exact
-    microsecond gaps — integers in both engines.
-    """
-    ev = read_events_stream(spark, sf_dir)
+def _clicks_join_purchases(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Clicks joined to the same user's purchases made within
+    ``ATTRIBUTION_HORIZON`` after them, both sides watermarked by
+    ``JOIN_WATERMARK_DELAY``: the stream-stream join the three funnel
+    operators below share; ``how`` is inner, left_outer or full_outer."""
     clicks = (
-        ev.filter(F.col("event_type") == "click")
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             "user_id",
@@ -442,7 +485,7 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", JOIN_WATERMARK_DELAY)
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
@@ -450,8 +493,27 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("purchase_ts")
             <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
         ),
-        "inner",
-    ).select(
+        how,
+    )
+
+
+def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAM-STREAM inner join — the one streaming shape with state on
+    BOTH sides: every click within ``ATTRIBUTION_HORIZON`` of a same-user
+    purchase, the canonical funnel-attribution query. Joined in append
+    mode on user_id plus an event-time range condition.
+
+    Scale shape: both sides carry ``withWatermark`` and the join
+    condition bounds purchase time to [click_ts, click_ts + horizon], so
+    Spark derives state-eviction watermarks for each side — a click is
+    dropped from state once no future purchase could match it, and vice
+    versa; state held at any instant is one horizon's worth of events
+    per side, which runs forever at any volume. On the finite fixture
+    the whole file is one micro-batch, so the append-mode output equals
+    the batch range join (the oracle). The result rows are exact
+    microsecond gaps — integers in both engines.
+    """
+    joined = _clicks_join_purchases(spark, sf_dir, "inner").select(
         "user_id",
         "click_id",
         "purchase_id",
@@ -484,36 +546,7 @@ def stream_click_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction watermark`). Scale: state per side is one
     horizon+delay's worth of events, independent of corpus size —
     the property that lets the join run forever."""
-    ev = read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", JOIN_WATERMARK_DELAY)
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", JOIN_WATERMARK_DELAY)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
-        ),
-        "left_outer",
-    )
+    joined = _clicks_join_purchases(spark, sf_dir, "left_outer")
     abandoned = joined.filter(F.col("purchase_id").isNull()).select(
         "user_id",
         "click_id",
@@ -552,36 +585,7 @@ def stream_full_outer_reconcile(
     (horizon+delay for clicks, delay for purchases), independent of
     corpus size — the full-outer form costs no more state than the
     left-outer form, only the extra emission path."""
-    ev = read_events_stream(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", JOIN_WATERMARK_DELAY)
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", JOIN_WATERMARK_DELAY)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
-        ),
-        "full_outer",
-    )
+    joined = _clicks_join_purchases(spark, sf_dir, "full_outer")
     recon = joined.select(
         F.coalesce("user_id", "p_user_id").alias("uid"),
         "click_id",
@@ -777,23 +781,19 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost or doubled across the batch boundaries. Scale: the sink
     write is the batch DataFrame's own distributed write (map-only
     here); checkpointing bounds replay to the last uncommitted batch."""
-    import shutil
-    import tempfile
-
     src = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     # KEYED sink dir, cleared per invocation (not mkdtemp): repeated
     # runs reuse one bounded location instead of accumulating a copy
     # of the events table per call (round-5 review). The checkpoint is
-    # fresh per run — reusing one would make AvailableNow a no-op on
-    # the second call — and is removed once the run terminates.
+    # run_stream's fresh one — reusing one would make AvailableNow a
+    # no-op on the second call.
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     sink_dir = os.path.join(
         "/tmp/pim_orc_spark/stream", sf_tag, "fb_sink"
     )
     shutil.rmtree(sink_dir, ignore_errors=True)
     os.makedirs(sink_dir, exist_ok=True)
-    ckpt_dir = tempfile.mkdtemp(prefix="fb_ckpt_")
 
     ev = normalize_event_ts(
         spark.readStream.schema(schema)
@@ -807,22 +807,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(sink_dir, f"batch_id={batch_id}")
         )
 
-    with _CONF_LOCK:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-        try:
-            q = (
-                ev.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+    run_stream(ev, write_batch)
 
     sunk = spark.read.option("basePath", sink_dir).parquet(sink_dir)
     # MATERIALIZE before returning (eager localCheckpoint): the keyed
@@ -861,8 +846,6 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analogue: none — the reference is a one-shot batch
     reader (reader.cc) with no persistent state; this is part of the
     §2.7 streaming surface the Spark engine adds."""
-    import shutil
-
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -877,22 +860,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         "/tmp/pim_orc_spark/stream", sf_tag, "state_reader_ckpt"
     )
     shutil.rmtree(ckpt_dir, ignore_errors=True)
-    with _CONF_LOCK:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-        try:
-            q = (
-                agg.writeStream.format("noop")
-                .option("checkpointLocation", ckpt_dir)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_stream(agg, "noop", "complete", ckpt_dir)
 
     state = spark.read.format("statestore").load(ckpt_dir)
     # MATERIALIZE eagerly: the keyed checkpoint is rmtree'd by the
@@ -964,18 +932,14 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     per live entity — dimension-sized, not fact-sized); table formats
     replace the full-state rewrite with file-level merge-on-read, but
     the dataflow (delta agg + keyed merge) is identical."""
-    import shutil
-    import tempfile
-
     src = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     state_root = os.path.join(
         "/tmp/pim_orc_spark/stream", sf_tag, "cdc_state"
     )
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root, exist_ok=True)
-    ckpt_dir = tempfile.mkdtemp(prefix="cdc_ckpt_")
 
     ev = normalize_event_ts(
         spark.readStream.schema(schema)
@@ -989,22 +953,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cdc_merge_batch(batch_df, batch_id, state_root)
         generations.append(batch_id)
 
-    with _CONF_LOCK:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-        try:
-            q = (
-                ev.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            shutil.rmtree(ckpt_dir, ignore_errors=True)
+    run_stream(ev, apply_batch)
 
     final_gen = os.path.join(state_root, f"gen={max(generations)}")
     state = spark.read.parquet(final_gen)

@@ -1057,3 +1057,14 @@ def test_exact_sum_plan_construction_round_trips(spark, sf_dir, round_trips):
         queries[name](spark, sf_dir)
         calls, _ = round_trips(queries[name], spark, sf_dir)
         assert calls <= ceiling, f"{name}: {calls} gateway round trips"
+
+
+def test_q73_plan_construction_round_trips(spark, sf_dir, round_trips):
+    """q73's triangle kernel is two SQL statements (orient, then wedge
+    and close), not Column algebra: a warm build made 1,092 gateway
+    round trips that way and 260 as SQL text."""
+    from pim_orc_spark.operators.relational import q73_triangle_count
+
+    q73_triangle_count(spark, sf_dir)
+    calls, _ = round_trips(q73_triangle_count, spark, sf_dir)
+    assert calls <= 400, f"q73: {calls} gateway round trips"

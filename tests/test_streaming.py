@@ -17,12 +17,73 @@ def test_stream_matches_batch_oracle(spark, sf_dir, name):
     assert ok, f"{name}: {msg}"
 
 
-def test_repeat_invocation_isolated(spark, sf_dir):
+def test_repeat_invocation_isolated(spark, sf_dir, round_trips):
     """Memory-sink table names must not collide across invocations in
-    one session (the driver sweeps queries() repeatedly)."""
-    a = stream_events.stream_grouped_totals(spark, sf_dir).count()
-    b = stream_events.stream_grouped_totals(spark, sf_dir).count()
-    assert a == b == 5
+    one session (the driver sweeps queries() repeatedly), and a run
+    leaves no memory-sink table behind: N calls hold no N tables of
+    driver memory, and no name probe grows with the earlier calls, so
+    every warm build costs the same gateway round trips."""
+
+    def tables():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("stream_grouped_totals")
+        }
+
+    before = tables()
+    counts, calls = [], []
+    for _ in range(5):
+        n, df = round_trips(
+            stream_events.stream_grouped_totals, spark, sf_dir
+        )
+        calls.append(n)
+        counts.append(df.count())
+    assert counts == [5] * 5
+    assert len(tables()) <= len(before), sorted(tables() - before)
+    assert len(set(calls[1:])) == 1, calls
+
+
+def test_run_stream_failure_restores_conf_and_own_checkpoint(
+    spark, tmp_path
+):
+    """A foreachBatch function that raises through run_stream: the
+    session's shuffle-partition count is restored, the checkpoint the
+    helper created is removed, and a caller's checkpoint stays (the
+    crash-recovery tests restart from it)."""
+    import glob
+    import os
+    import tempfile
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+
+    seen = []
+
+    def fail(batch_df, batch_id):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("simulated sink failure")
+
+    def own_checkpoints():
+        return set(
+            glob.glob(os.path.join(tempfile.gettempdir(), "stream_ckpt_*"))
+        )
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert parts != str(stream_events.state_partitions(spark))
+    before = own_checkpoints()
+    stream = spark.readStream.schema("id long").parquet(src)
+    with pytest.raises(Exception, match="simulated sink failure"):
+        stream_events.run_stream(stream, fail)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert own_checkpoints() == before
+
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match="simulated sink failure"):
+        stream_events.run_stream(stream, fail, checkpoint=ckpt)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert os.path.isdir(os.path.join(ckpt, "offsets"))
+    assert seen == [str(stream_events.state_partitions(spark))] * 2
 
 
 def test_state_reader_metadata_inventory(spark, sf_dir):
@@ -43,9 +104,7 @@ def test_state_reader_metadata_inventory(spark, sf_dir):
     assert len(md) == 1, f"expected one stateful operator, got {md}"
     row = md[0]
     assert row.operatorName == "stateStoreSave"
-    assert row.numPartitions == int(
-        stream_events.STREAM_SHUFFLE_PARTITIONS
-    )
+    assert row.numPartitions == stream_events.state_partitions(spark)
     assert row.minBatchId == 0 and row.maxBatchId >= row.minBatchId
 
 
@@ -93,20 +152,9 @@ def test_dedup_within_watermark_bounds_state_and_reemits(spark, tmp_path):
         ["user_id"]
     )
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("wm_dedup_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = q.recentProgress
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    progress = stream_events.run_stream(
+        deduped, "wm_dedup_test"
+    ).recentProgress
 
     rows = sorted(
         (r["user_id"], r["ts"]) for r in spark.table("wm_dedup_test").collect()
@@ -174,20 +222,9 @@ def test_watermark_append_evicts_state_and_emits_complete_windows(
     )
     agg = stream_events.windowed_counts_append(stream, delay="10 minutes")
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("wm_append_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = q.recentProgress
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    progress = stream_events.run_stream(
+        agg, "wm_append_test"
+    ).recentProgress
 
     got = {
         (r["window_start"], r["event_type"]): r["n_events"]
@@ -268,14 +305,15 @@ def test_foreach_batch_sink_recovers_from_mid_run_crash(spark, sf_dir, tmp_path)
     from pim_orc_spark.functions.numeric import exact_sum
     from pim_orc_spark.streaming.stream_events import (
         FB_SPLIT_FILES,
-        _CONF_LOCK,
-        STREAM_SHUFFLE_PARTITIONS,
         _split_events_dir,
         normalize_event_ts,
+        parquet_schema,
+        run_stream,
+        stream_confs,
     )
 
     src = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(sink)
@@ -301,39 +339,18 @@ def test_foreach_batch_sink_recovers_from_mid_run_crash(spark, sf_dir, tmp_path)
 
         return write_batch
 
-    with _CONF_LOCK:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-        try:
-            q = (
-                stream()
-                .writeStream.foreachBatch(make_writer(crash_after=1))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            with pytest.raises(Exception, match="simulated sink crash"):
-                q.awaitTermination()
-            crashed_batches = {
-                d for d in os.listdir(sink) if d.startswith("batch_id=")
-            }
-            assert crashed_batches == {"batch_id=0", "batch_id=1"}
+    with stream_confs(spark):
+        with pytest.raises(Exception, match="simulated sink crash"):
+            run_stream(stream(), make_writer(crash_after=1), checkpoint=ckpt)
+        crashed_batches = {
+            d for d in os.listdir(sink) if d.startswith("batch_id=")
+        }
+        assert crashed_batches == {"batch_id=0", "batch_id=1"}
 
-            # RESTART with the same checkpoint: batch 1 (uncommitted in
-            # the checkpoint) replays — overwriting its own directory —
-            # then the remaining batches run to completion
-            q2 = (
-                stream()
-                .writeStream.foreachBatch(make_writer(crash_after=None))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q2.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        # RESTART with the same checkpoint: batch 1 (uncommitted in
+        # the checkpoint) replays — overwriting its own directory —
+        # then the remaining batches run to completion
+        run_stream(stream(), make_writer(crash_after=None), checkpoint=ckpt)
 
     batches = {d for d in os.listdir(sink) if d.startswith("batch_id=")}
     assert batches == {
@@ -376,15 +393,16 @@ def test_cdc_apply_recovers_from_mid_run_crash(spark, sf_dir, tmp_path):
     import duckdb
 
     from pim_orc_spark.streaming.stream_events import (
-        _CONF_LOCK,
-        STREAM_SHUFFLE_PARTITIONS,
         _cdc_merge_batch,
         _split_events_dir,
         normalize_event_ts,
+        parquet_schema,
+        run_stream,
+        stream_confs,
     )
 
     src = _split_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     state_root = str(tmp_path / "cdc_state")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(state_root)
@@ -404,35 +422,14 @@ def test_cdc_apply_recovers_from_mid_run_crash(spark, sf_dir, tmp_path):
 
         return apply_batch
 
-    with _CONF_LOCK:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS
-        )
-        try:
-            q = (
-                stream()
-                .writeStream.foreachBatch(make_apply(crash_after=1))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            with pytest.raises(Exception, match="simulated cdc crash"):
-                q.awaitTermination()
-            assert {
-                d for d in os.listdir(state_root) if d.startswith("gen=")
-            } == {"gen=0", "gen=1"}
+    with stream_confs(spark):
+        with pytest.raises(Exception, match="simulated cdc crash"):
+            run_stream(stream(), make_apply(crash_after=1), checkpoint=ckpt)
+        assert {
+            d for d in os.listdir(state_root) if d.startswith("gen=")
+        } == {"gen=0", "gen=1"}
 
-            q2 = (
-                stream()
-                .writeStream.foreachBatch(make_apply(crash_after=None))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q2.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        run_stream(stream(), make_apply(crash_after=None), checkpoint=ckpt)
 
     gens = sorted(
         int(d.split("=")[1])
@@ -494,10 +491,8 @@ def test_state_reader_change_feed_tracks_batch_deltas(spark, tmp_path):
         "RocksDBStateStoreProvider"
     )
     old_provider = spark.conf.get(PROVIDER_KEY, None)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(PROVIDER_KEY, ROCKS)
     spark.conf.set(CHANGELOG_KEY, "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         agg = (
             spark.readStream.schema(schema)
@@ -507,21 +502,13 @@ def test_state_reader_change_feed_tracks_batch_deltas(spark, tmp_path):
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
+        stream_events.run_stream(agg, "noop", "complete", ckpt)
     finally:
         if old_provider is None:
             spark.conf.unset(PROVIDER_KEY)
         else:
             spark.conf.set(PROVIDER_KEY, old_provider)
         spark.conf.unset(CHANGELOG_KEY)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     feed = (
         spark.read.format("statestore")
@@ -572,37 +559,25 @@ def test_state_reader_exposes_both_join_sides(spark, tmp_path):
         1
     ).write.parquet(str(r_src))
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        ls = (
-            spark.readStream.schema("k int, ts timestamp")
-            .parquet(str(l_src))
-            .withWatermark("ts", "10 minutes")
-        )
-        rs = (
-            spark.readStream.schema("k int, ts timestamp")
-            .parquet(str(r_src))
-            .withWatermark("ts", "10 minutes")
-        )
-        j = ls.alias("l").join(
-            rs.alias("r"),
-            (F.col("l.k") == F.col("r.k"))
-            & F.col("r.ts").between(
-                F.col("l.ts"),
-                F.col("l.ts") + F.expr("INTERVAL 5 MINUTES"),
-            ),
-        )
-        q = (
-            j.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    ls = (
+        spark.readStream.schema("k int, ts timestamp")
+        .parquet(str(l_src))
+        .withWatermark("ts", "10 minutes")
+    )
+    rs = (
+        spark.readStream.schema("k int, ts timestamp")
+        .parquet(str(r_src))
+        .withWatermark("ts", "10 minutes")
+    )
+    j = ls.alias("l").join(
+        rs.alias("r"),
+        (F.col("l.k") == F.col("r.k"))
+        & F.col("r.ts").between(
+            F.col("l.ts"),
+            F.col("l.ts") + F.expr("INTERVAL 5 MINUTES"),
+        ),
+    )
+    stream_events.run_stream(j, "noop", "append", ckpt)
 
     def side_rows(side):
         st = (
@@ -661,16 +636,9 @@ def test_rocksdb_state_store_matches_default_and_restarts(spark, tmp_path):
                 .groupBy("k")
                 .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
             )
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-            progress = q.lastProgress
+            progress = stream_events.run_stream(
+                agg, name, "complete", ckpt
+            ).lastProgress
         finally:
             if provider:
                 if old is None:
